@@ -15,10 +15,14 @@ production the same code runs with the endpoint_url removed.
 from __future__ import annotations
 
 import atexit
+import json
+import re
 import socket
+import sys
 import time
 
 import boto3
+from pyspark import cloudpickle
 
 _PORT = 5123
 _server = None
@@ -119,6 +123,19 @@ def read_all_records(stream: str) -> list[dict]:
     return out
 
 
+# PutRecords limits (Kinesis API): per call, per record.
+PUT_MAX_RECORDS = 500
+PUT_MAX_CALL_BYTES = 5 << 20
+PUT_MAX_RECORD_BYTES = 1 << 20
+
+
+def moto_lock_path(stream: str) -> str:
+    """The put-lock file of one stream (see ``moto_put_lock``). Callers
+    register it for removal on the driver; the lock itself only opens
+    it, so it runs on executors that cannot import this package."""
+    return "/tmp/kas_moto_put.%s.lock" % re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
+
+
 class moto_put_lock:
     """Cross-process serialization of PutRecords against the LOCAL moto
     emulator: moto's in-memory Kinesis backend drops records under
@@ -140,14 +157,8 @@ class moto_put_lock:
     def __enter__(self):
         if self.local:
             import fcntl
-            import re as _re
 
-            safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", self.stream)
-            from kinesis_adapter_spark.staging import ephemeral_file
-
-            self._fh = open(
-                ephemeral_file(f"/tmp/kas_moto_put.{safe}.lock"), "w"
-            )
+            self._fh = open(moto_lock_path(self.stream), "w")
             fcntl.flock(self._fh, fcntl.LOCK_EX)
         return self
 
@@ -160,6 +171,25 @@ class moto_put_lock:
         return False
 
 
+def _record_bytes(rec: dict) -> int:
+    return len(rec["Data"]) + len(rec["PartitionKey"].encode())
+
+
+def _chunks(records: list[dict], sizes: list[int]):
+    """Consecutive runs of at most PUT_MAX_RECORDS records and
+    PUT_MAX_CALL_BYTES bytes."""
+    chunk: list[dict] = []
+    total = 0
+    for rec, n in zip(records, sizes):
+        if chunk and (len(chunk) == PUT_MAX_RECORDS or total + n > PUT_MAX_CALL_BYTES):
+            yield chunk
+            chunk, total = [], 0
+        chunk.append(rec)
+        total += n
+    if chunk:
+        yield chunk
+
+
 def put_records_with_retry(
     kin,
     stream: str,
@@ -167,18 +197,29 @@ def put_records_with_retry(
     max_retries: int = 5,
     backoff_s: float = 0.05,
 ) -> int:
-    """PutRecords in ≤500-record chunks with per-record failure retry.
+    """PutRecords within the API limits, with per-record failure retry.
 
     This is the reference adapter's core sink contract (SURVEY.md
-    §2.0): Kinesis caps PutRecords at 500 records / 5 MB; individual
-    records can fail (throttling) while the call succeeds — those are
-    re-enqueued with exponential backoff. Returns records delivered."""
+    §2.0): a call carries at most 500 records and 5 MiB of Data plus
+    PartitionKey; individual records can fail (throttling) while the
+    call succeeds — those are re-enqueued with exponential backoff. A
+    record over 1 MiB can never be put, so it raises ``ValueError``
+    before anything is sent. Returns records delivered.
+
+    Every PutRecords of the package goes through here, on the driver
+    and in executor closures alike (see ``partition_writer``)."""
+    sizes = [_record_bytes(rec) for rec in records]
+    for n in sizes:
+        if n > PUT_MAX_RECORD_BYTES:
+            raise ValueError(
+                f"Kinesis record of {n} bytes for stream {stream!r} exceeds "
+                f"the {PUT_MAX_RECORD_BYTES}-byte PutRecords record limit"
+            )
     delivered = 0
     lock = moto_put_lock(
         getattr(getattr(kin, "meta", None), "endpoint_url", None), stream=stream
     )
-    for i in range(0, len(records), 500):
-        chunk = records[i : i + 500]
+    for chunk in _chunks(records, sizes):
         attempt = 0
         while chunk:
             with lock:
@@ -199,3 +240,32 @@ def put_records_with_retry(
                 raise RuntimeError(f"{len(chunk)} records failed after retries")
             time.sleep(backoff_s * (2**attempt))
     return delivered
+
+
+def row_records(rows, pk_col: str = "pk") -> list[dict]:
+    """Kinesis records of Spark Rows: the row without its key column as
+    JSON, keyed by ``str`` of the key (a null key is sent as "None")."""
+    out = []
+    for r in rows:
+        d = r.asDict()
+        pk = str(d.pop(pk_col))
+        out.append({"Data": json.dumps(d).encode(), "PartitionKey": pk})
+    return out
+
+
+def partition_writer(stream: str, endpoint: str, aws_kw: dict, pk_col: str = "pk"):
+    """A ``foreachPartition`` function that puts its partition's rows
+    (``row_records``) through ``put_records_with_retry`` with its own
+    client. It closes over plain values only, so it pickles."""
+
+    def write_partition(rows):
+        kin = boto3.client("kinesis", endpoint_url=endpoint, **aws_kw)
+        put_records_with_retry(kin, stream, row_records(rows, pk_col))
+
+    return write_partition
+
+
+# Executors need not have this package importable: functions of this
+# module sent to them (``partition_writer``'s closure and what it calls)
+# are pickled by value.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from kinesis_adapter_spark.catalog import load
 from kinesis_adapter_spark.plans.registry import query
 from kinesis_adapter_spark.sources import aws
+from kinesis_adapter_spark.staging import ephemeral_file
 
 # Bump the version when any derived-fixture FORMAT changes: staged
 # fixtures are cached by existence checks, so a format change without a
@@ -437,50 +438,17 @@ def sink_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialize→put→shard→get round-trip must be lossless.
 
     Writes run in ``foreachPartition`` on executors (each worker owns
-    its partition's batches — the production shape); the read-back
-    drain is driver-side by nature of the check."""
+    its partition's batches — the production shape) through the
+    package's one put function, ``aws.put_records_with_retry``; the
+    read-back drain is driver-side by nature of the check."""
     stream = f"kas-sink-{uuid.uuid4().hex[:10]}"
     aws.create_stream(stream, shards=4)
-    endpoint = aws.endpoint_url()
-    kw = dict(aws.AWS_KW)
+    ephemeral_file(aws.moto_lock_path(stream))
 
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-
-    def write_partition(rows):
-        # Self-contained: executors may not have this package on their
-        # sys.path, so the chunk/retry loop is inlined (mirrors
-        # aws.put_records_with_retry, which tests cover directly).
-        import json as _json
-        import time as _time
-
-        import boto3 as _boto3
-
-        kin = _boto3.client("kinesis", endpoint_url=endpoint, **kw)
-        recs = [
-            {
-                "Data": _json.dumps(
-                    {"event_id": r.event_id, "event_type": r.event_type}
-                ).encode(),
-                "PartitionKey": str(r.user_id % 4),
-            }
-            for r in rows
-        ]
-        for i in range(0, len(recs), 500):
-            chunk = recs[i : i + 500]
-            attempt = 0
-            while chunk:
-                resp = kin.put_records(StreamName=stream, Records=chunk)
-                if not resp.get("FailedRecordCount"):
-                    break
-                chunk = [
-                    rec for rec, st in zip(chunk, resp["Records"]) if "ErrorCode" in st
-                ]
-                attempt += 1
-                if attempt > 5:
-                    raise RuntimeError("kinesis put failed after retries")
-                _time.sleep(0.05 * (2**attempt))
-
-    ev.foreachPartition(write_partition)
+    ev = load(spark, sf_dir, "events").select(
+        "event_id", "event_type", (F.col("user_id") % 4).alias("pk")
+    )
+    ev.foreachPartition(aws.partition_writer(stream, aws.endpoint_url(), aws.AWS_KW))
 
     records = aws.read_all_records(stream)
     payloads = [json.loads(r["Data"]) for r in records]

@@ -4,23 +4,50 @@ stage re-expressed on Structured Streaming (SURVEY.md §2.0, §3.4).
 Contract implemented:
 - records serialized to JSON, partitioned by a key column (Kinesis
   routes partition-key hash → shard, ordering per shard only);
-- PutRecords in ≤500-record chunks (the API cap), per-record failure
-  retry with exponential backoff (a PutRecords call can succeed while
-  individual records throttle — FailedRecordCount);
+- PutRecords within the API limits (≤500 records and ≤5 MiB per call,
+  ≤1 MiB per record), per-record failure retry with exponential
+  backoff (a PutRecords call can succeed while individual records
+  throttle — FailedRecordCount): ``aws.put_records_with_retry``;
 - batch_id idempotency ledger: foreachBatch is at-least-once across
   restarts; a delivered batch_id is recorded durably next to the
   checkpoint and re-delivery of the same batch is skipped, upgrading
   the sink to effectively-once for whole-batch replays.
 
-Writes fan out via DataFrame.foreachPartition, so each executor ships
-its own partitions' chunks — the production shape. The closure is
-self-contained (executors don't need this package importable).
+Where a micro-batch is put depends on Catalyst's size estimate of its
+plan (read without running a job):
+
+- at most ``DRIVER_PUT_MAX_BYTES`` (1 MiB): the batch is collected and
+  put from the driver through one client the sink keeps across
+  batches. 1 MiB is one shard-second of Kinesis write quota, so such a
+  batch gains nothing from parallel writers, while a
+  ``foreachPartition`` job would cost it a Python-worker round trip
+  per trigger — the dominant cost of a steady trickle;
+- larger, or of unknown size (Spark then reports its default maximum):
+  writes fan out via ``DataFrame.foreachPartition``, so each executor
+  ships its own partitions' chunks — the path that scales past what one
+  driver can hold. The closure (``aws.partition_writer``) is pickled by
+  value, so executors don't need this package importable.
+
+Both paths encode rows with ``aws.row_records``, so the bytes sent do
+not depend on the path.
 """
 
 from __future__ import annotations
 
 import json
 from pathlib import Path
+
+import boto3
+
+from kinesis_adapter_spark.sources import aws
+from kinesis_adapter_spark.staging import ephemeral_file
+
+DRIVER_PUT_MAX_BYTES = 1 << 20
+
+
+def plan_size_bytes(df) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan; runs no job."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 class KinesisForeachBatchSink:
@@ -40,82 +67,24 @@ class KinesisForeachBatchSink:
         self.ledger = Path(ledger_dir)
         self.ledger.mkdir(parents=True, exist_ok=True)
         self.pk_col = partition_key_col
-        # Driver-side registration of the executor-side moto lock file
-        # (same naming as put_guard below) so a run leaves no /tmp
-        # residue — the executor closure itself stays
-        # package-import-free; __init__ runs on the driver only.
-        import re as _re
-
-        from kinesis_adapter_spark.staging import ephemeral_file
-
-        safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
-        ephemeral_file(f"/tmp/kas_moto_put.{safe}.lock")
+        self._kin = None  # the driver path's client, made on first use
+        # The put lock opens this file on driver and executors alike;
+        # register it here, on the driver, so a run leaves no /tmp residue.
+        ephemeral_file(aws.moto_lock_path(stream))
 
     def __call__(self, batch_df, batch_id: int) -> None:
         mark = self.ledger / f"batch-{batch_id}.done"
         if mark.exists():  # replayed batch after restart → skip (idempotent)
             return
-        stream, endpoint, aws_kw, pk_col = (
-            self.stream,
-            self.endpoint,
-            self.aws_kw,
-            self.pk_col,
-        )
-
-        def write_partition(rows):
-            import contextlib
-            import json as _json
-            import time as _time
-
-            import boto3 as _boto3
-
-            @contextlib.contextmanager
-            def put_guard():
-                # moto's in-memory Kinesis loses records under
-                # concurrent puts; serialize against the LOCAL emulator
-                # only (real Kinesis runs lock-free). Keyed by stream
-                # name with the SAME file naming as aws.moto_put_lock so
-                # the two lock sites contend on one file per stream but
-                # unrelated streams proceed in parallel (ADVICE r01).
-                # Inline (no package import): executors must not need
-                # kinesis_adapter_spark importable.
-                if endpoint and "127.0.0.1" in endpoint:
-                    import fcntl
-                    import re as _re
-
-                    safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
-                    with open(f"/tmp/kas_moto_put.{safe}.lock", "w") as fh:
-                        fcntl.flock(fh, fcntl.LOCK_EX)
-                        try:
-                            yield
-                        finally:
-                            fcntl.flock(fh, fcntl.LOCK_UN)
-                else:
-                    yield
-
-            kin = _boto3.client("kinesis", endpoint_url=endpoint, **aws_kw)
-            recs = []
-            for r in rows:
-                d = r.asDict()
-                pk = str(d.pop(pk_col))
-                recs.append({"Data": _json.dumps(d).encode(), "PartitionKey": pk})
-            for i in range(0, len(recs), 500):
-                chunk = recs[i : i + 500]
-                attempt = 0
-                while chunk:
-                    with put_guard():
-                        resp = kin.put_records(StreamName=stream, Records=chunk)
-                    if not resp.get("FailedRecordCount"):
-                        break
-                    chunk = [
-                        rec
-                        for rec, st in zip(chunk, resp["Records"])
-                        if "ErrorCode" in st
-                    ]
-                    attempt += 1
-                    if attempt > 5:
-                        raise RuntimeError("kinesis put failed after retries")
-                    _time.sleep(0.05 * (2**attempt))
-
-        batch_df.foreachPartition(write_partition)
+        if plan_size_bytes(batch_df) <= DRIVER_PUT_MAX_BYTES:
+            if self._kin is None:
+                self._kin = boto3.client(
+                    "kinesis", endpoint_url=self.endpoint, **self.aws_kw
+                )
+            records = aws.row_records(batch_df.collect(), self.pk_col)
+            aws.put_records_with_retry(self._kin, self.stream, records)
+        else:
+            batch_df.foreachPartition(
+                aws.partition_writer(self.stream, self.endpoint, self.aws_kw, self.pk_col)
+            )
         mark.write_text(json.dumps({"batch_id": batch_id}))

@@ -118,22 +118,40 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert rows.get("10") == 1
 
 
-def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("put_path", ["driver", "executor"])
+def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path, monkeypatch, put_path):
     """Re-running the e2e pipeline with the SAME checkpoint+ledger and
-    stream delivers nothing new (batch-id ledger suppresses replay)."""
+    stream delivers nothing new (batch-id ledger suppresses replay), on
+    both put paths; each path delivers the same bytes."""
     from kinesis_adapter_spark.sources import aws
-    from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
+    from kinesis_adapter_spark.streaming import kinesis_sink
 
+    monkeypatch.setattr(
+        kinesis_sink, "DRIVER_PUT_MAX_BYTES", 1 << 60 if put_path == "driver" else 0
+    )
+    writers = []
+    partition_writer = aws.partition_writer
+    monkeypatch.setattr(
+        aws, "partition_writer", lambda *a: writers.append(a) or partition_writer(*a)
+    )
+
+    names = ["plain", None, "café ✓ 日本", "naïve"]  # a null field, non-ASCII text
     src = tmp_path / "src"
+    expected = []
     for i in range(3):
-        _write_ndjson(
-            src / f"f{i}.json",
-            [_event(i * 10 + j, f"2024-01-01T0{i}:00:0{j}", uid=j) for j in range(4)],
-        )
+        rows = [
+            {"event_id": i * 10 + j, "user_id": None if (i, j) == (1, 2) else j, "name": names[j]}
+            for j in range(4)
+        ]
+        _write_ndjson(src / f"f{i}.json", rows)
+        for r in rows:
+            uid = r["user_id"]
+            pk = str(None if uid is None else uid % 2)  # a null key is sent as "None"
+            expected.append((json.dumps({"event_id": r["event_id"], "name": r["name"]}).encode(), pk))
     stream_name = f"kas-test-{tmp_path.name.lower()}"
     aws.create_stream(stream_name, shards=2)
     ckpt = str(tmp_path / "ckpt")
-    sink = KinesisForeachBatchSink(
+    sink = kinesis_sink.KinesisForeachBatchSink(
         stream=stream_name,
         endpoint=aws.endpoint_url(),
         aws_kw=aws.AWS_KW,
@@ -142,9 +160,9 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
 
     def run():
         q = (
-            spark.readStream.schema(SCHEMA)
+            spark.readStream.schema("event_id BIGINT, user_id BIGINT, name STRING")
             .json(str(src))
-            .select("event_id", (F.col("user_id") % 2).cast("string").alias("pk"))
+            .select("event_id", "name", (F.col("user_id") % 2).cast("string").alias("pk"))
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -152,12 +170,19 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
         )
         q.awaitTermination()
 
+    def drained():
+        return sorted((r["Data"], r["PartitionKey"]) for r in aws.read_all_records(stream_name))
+
     run()
-    n1 = len(aws.read_all_records(stream_name))
-    assert n1 == 12
+    assert drained() == sorted(expected)
+    if put_path == "driver":
+        assert sink._kin is not None and not writers
+    else:
+        assert sink._kin is None and writers
+    n_writers = len(writers)
     run()  # restart: checkpoint says done; even a replay would hit the ledger
-    n2 = len(aws.read_all_records(stream_name))
-    assert n2 == 12, "restart must not redeliver"
+    assert len(drained()) == 12, "restart must not redeliver"
+    assert len(writers) == n_writers
 
 
 def test_sink_retry_on_partial_failure(monkeypatch):
@@ -180,6 +205,64 @@ def test_sink_retry_on_partial_failure(monkeypatch):
     n = put_records_with_retry(FakeKinesis(), "s", [{"Data": b"x", "PartitionKey": "0"}] * 600)
     assert n == 600
     assert calls[0] == 500 and calls[1] == 250 and calls[2] == 100  # chunking + retry
+
+
+def test_put_records_chunks_by_bytes_and_rejects_oversize():
+    """Each PutRecords call carries at most 500 records and 5 MiB of
+    Data + PartitionKey; a record over 1 MiB fails before any put."""
+    from kinesis_adapter_spark.sources.aws import put_records_with_retry
+
+    calls = []
+
+    class FakeKinesis:
+        def put_records(self, StreamName, Records):
+            calls.append(Records)
+            return {"FailedRecordCount": 0, "Records": [{"SequenceNumber": "1"}] * len(Records)}
+
+    mib = 1 << 20
+    full = {"Data": b"x" * (mib - 1), "PartitionKey": "k"}  # exactly 1 MiB with its key
+    tiny = {"Data": b"x", "PartitionKey": "0"}
+    assert put_records_with_retry(FakeKinesis(), "s", [full] * 12 + [tiny] * 600) == 612
+    assert [len(c) for c in calls] == [5, 5, 500, 102]
+    for c in calls:
+        assert sum(len(r["Data"]) + len(r["PartitionKey"]) for r in c) <= 5 * mib
+
+    calls.clear()
+    over = {"Data": b"x" * mib, "PartitionKey": "k"}
+    with pytest.raises(ValueError, match=f"{mib + 1} bytes for stream 'big-stream'"):
+        put_records_with_retry(FakeKinesis(), "big-stream", [tiny] * 600 + [over])
+    assert calls == []
+
+
+def test_partition_writer_ships_without_the_package(tmp_path):
+    """The executor closure and the put function unpickle and run in a
+    process that cannot import this package (they ship by value)."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from pyspark import cloudpickle
+
+    from kinesis_adapter_spark.sources import aws
+
+    blob = tmp_path / "fns.pkl"
+    blob.write_bytes(cloudpickle.dumps(
+        (aws.partition_writer("s", aws.endpoint_url(), aws.AWS_KW), aws.put_records_with_retry)
+    ))
+    code = textwrap.dedent("""
+        import pickle, sys
+        writer, put = pickle.loads(open(sys.argv[1], "rb").read())
+        class Kin:
+            def put_records(self, StreamName, Records):
+                return {"FailedRecordCount": 0, "Records": [{}] * len(Records)}
+        writer(iter([]))
+        assert put(Kin(), "s", [{"Data": b"x", "PartitionKey": "0"}] * 3) == 3
+        leaked = [m for m in sys.modules if m.startswith("kinesis_adapter_spark")]
+        assert not leaked, leaked
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    subprocess.run([sys.executable, "-c", code, str(blob)], cwd=tmp_path, env=env, check=True)
 
 
 def test_windowed_state_survives_restart(spark, tmp_path):
