@@ -336,11 +336,12 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Per-artifact SPEC token for the staged CC label tables (ADVICE r10):
-# the marker previously keyed on the SOURCE fingerprint alone, so a
-# change to _cc_pairs or the label semantics without a repo-wide
-# DERIVED_VERSION bump would silently serve stale cluster labels to the
-# registry key, the oracle check, and the bench read-path anchor. Bump
-# the relevant component whenever its semantics change:
+# the artifact is keyed by its SOURCE fingerprint, so a change to
+# _cc_pairs or the label semantics without a repo-wide DERIVED_VERSION
+# bump would silently serve stale cluster labels to the registry key,
+# the oracle check, and the bench read-path anchor; the tokens are part
+# of the artifact NAME instead. Bump the relevant component whenever
+# its semantics change:
 #   pairs-v1  — _cc_pairs fixture (mutated-copy edges + d+3M chains)
 #   prop-v1   — cc_propagate_labels (min-label propagation)
 #   stars-v1  — cc_star_labels (large-star/small-star contraction)
@@ -352,42 +353,29 @@ def _staged_cc_labels(spark, sf_dir: str, stem: str, core) -> DataFrame:
     """Build-once staging for a CC label table: run ``core`` on the
     pair fixture inside a persist guard (every in-loop localCheckpoint
     is released once the write materializes), stage the labels under
-    derived_dir keyed by the source fingerprint PLUS the algorithm/
-    fixture spec tokens (so a semantics change invalidates the artifact
-    even without a DERIVED_VERSION bump), and return a lazy read that
-    owns no persist.
-
-    CONTENT-ADDRESSED as of r15 (the ivf_seed_table discipline,
-    VERDICT r14 item #3): the combined fingerprint is hashed into the
-    final directory NAME via publish_fingerprinted — the pre-r15
-    ``mode("overwrite")`` onto the shared ``{stem}.parquet`` path had
-    the delete-then-write window where a concurrent engine's held
-    read path could FileNotFound mid-query when the fingerprint (or
-    spec token) changed."""
+    derived_dir keyed by the source fingerprint, with the algorithm/
+    fixture spec tokens in the name (so a semantics change invalidates
+    the artifact even without a DERIVED_VERSION bump), and return a
+    lazy read of the resolved build that owns no persist (the
+    ivf_seed_table discipline, VERDICT r14 item #3)."""
     from pathlib import Path
 
-    from kinesis_adapter_spark.sources.scans import (
-        derived_dir,
-        publish_fingerprinted,
-        reap_stale_fingerprints,
-        source_fingerprint,
-    )
+    from kinesis_adapter_spark.sources.scans import derived_dir
+    from kinesis_adapter_spark.staging import staged
 
-    base = derived_dir(sf_dir) / f"{stem}.parquet"
-    src_fp = source_fingerprint(Path(sf_dir) / "documents.parquet")
-    fp = f"{src_fp}|{_CC_PAIRS_SPEC}|{_CC_CORE_SPEC[stem]}"
-
-    def stage(tmp: str) -> None:
+    def build(tmp: Path) -> None:
         with released_persists(spark):
             labels = core(_cc_pairs(spark, sf_dir))
             labels.select(
                 F.col("node").alias("doc_id"),
                 F.col("label").alias("cluster_id"),
-            ).write.parquet(tmp)
+            ).write.parquet(str(tmp))
 
-    final = publish_fingerprinted(base, fp, stage)
-    reap_stale_fingerprints(base, keep=final)
-    return spark.read.parquet(str(final)).orderBy("doc_id")
+    name = f"{stem}_{_CC_PAIRS_SPEC}_{_CC_CORE_SPEC[stem]}.parquet"
+    path = staged(
+        derived_dir(sf_dir) / name, [Path(sf_dir) / "documents.parquet"], build
+    )
+    return spark.read.parquet(str(path)).orderBy("doc_id")
 
 
 def cc_propagate_labels(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from kinesis_adapter_spark.catalog import load
 from kinesis_adapter_spark.plans.registry import query
 from kinesis_adapter_spark.sources.scans import DERIVED_ROOT, derived_dir
+from kinesis_adapter_spark.staging import run_root, staged
 
 
 #: HARD-error band for the 6-dp cross-engine rounding audit — 10× the
@@ -371,18 +372,20 @@ def ivf_layout_path(spark: SparkSession, sf_dir: str) -> str:
     build step a real deployment runs offline; per-process staging
     avoids cross-process overwrite races (same rationale as the
     bucketed-join tables, scaleops.py)."""
-    import os
 
-    from kinesis_adapter_spark.staging import pid_staging_dir
+    def build(tmp: Path) -> None:
+        e = load(spark, sf_dir, "embeddings")
+        _ivf_assigned(e, _ivf_centroids(e)).write.partitionBy("cell").parquet(
+            str(tmp)
+        )
 
     sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    path = pid_staging_dir(f"kas_ivf_{sf_tag}")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        e = load(spark, sf_dir, "embeddings")
-        _ivf_assigned(e, _ivf_centroids(e)).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(path)
-    return path
+    path = staged(
+        Path(run_root()) / f"kas_ivf_{sf_tag}",
+        [Path(sf_dir) / "embeddings.parquet"],
+        build,
+    )
+    return str(path)
 
 
 @query("ann_ivf_partitioned", _IVF_ORACLE)
@@ -951,28 +954,27 @@ def pca_components_table(spark: SparkSession, sf_dir: str) -> str:
     nondeterministic) — then eigh runs on the 64×64 covariance in
     microseconds. Eigenvector sign is fixed by making each
     component's largest-|coordinate| entry positive, then the matrix
-    and mean are rounded to 6 dp and written atomically (single-file
-    pyarrow write + os.replace, safe against concurrent stagers).
+    and mean are rounded to 6 dp and staged as one pyarrow file.
 
-    Cache invalidation (r7 ADVICE): single-file staging keys on a
-    sibling ``.src`` marker holding the source fingerprint of
-    embeddings.parquet (the ensure_events_csv pattern) — a regenerated
-    fixture at the same path restages instead of silently serving the
-    stale component matrix to BOTH engines."""
-    import os
+    Cache invalidation (r7 ADVICE): staged by the fingerprint of
+    embeddings.parquet — a regenerated fixture at the same path
+    restages instead of silently serving the stale component matrix
+    to BOTH engines."""
+    import pyarrow.parquet as pq
 
+    path = staged(
+        derived_dir(sf_dir) / "pca_components.parquet",
+        [Path(sf_dir) / "embeddings.parquet"],
+        lambda tmp: pq.write_table(_pca_fit(spark, sf_dir), tmp),
+    )
+    return str(path)
+
+
+def _pca_fit(spark: SparkSession, sf_dir: str):
+    """The rounded top-8 component table pca_components_table stages."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from kinesis_adapter_spark.sources.scans import source_fingerprint
-
-    out = derived_dir(sf_dir) / "pca_components.parquet"
-    marker = derived_dir(sf_dir) / "pca_components.parquet.src"
-    fp = source_fingerprint(Path(sf_dir) / "embeddings.parquet")
-    if out.exists() and marker.exists() and marker.read_text() == fp:
-        return str(out)
 
     d = _PCA_DIM
     e = load(spark, sf_dir, "embeddings")
@@ -1044,11 +1046,7 @@ def pca_components_table(spark: SparkSession, sf_dir: str) -> str:
             ),
         }
     )
-    tmp = out.parent / f"{out.name}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, out)
-    marker.write_text(fp)  # after the artifact: crash leaves it stale-marked
-    return str(out)
+    return tbl
 
 
 @query(
@@ -1885,28 +1883,16 @@ def ivf_seed_table(
     stages through _ivf_two_level_assign on first call) and the
     streaming maintain twin (which freezes it as the published model).
 
-    CONTENT-ADDRESSED as of r15 (VERDICT r14 item #3): the source
-    fingerprint is hashed into the final directory NAME
-    (publish_fingerprinted), published once and never deleted or
-    renamed-over — the pre-r15 delete-then-rename onto a shared
-    mutable name had a window where a concurrent reader (second
-    engine on the same host) could FileNotFound mid-query when the
-    fingerprint changed. Dead fingerprints and the legacy shared-name
-    artifact are collected by reap_stale_fingerprints (age-graced,
-    deferred while foreign kas runs are live)."""
-    from kinesis_adapter_spark.sources.scans import (
-        publish_fingerprinted,
-        reap_stale_fingerprints,
-        source_fingerprint,
+    Staged by the embeddings.parquet fingerprint (VERDICT r14 item
+    #3): a build is never deleted or renamed over while current, so a
+    concurrent reader (second engine on the same host) cannot
+    FileNotFound mid-query when the fingerprint changes."""
+    path = staged(
+        derived_dir(sf_dir) / f"ivf_seed_route_k{k}_c{kc}.parquet",
+        [Path(sf_dir) / "embeddings.parquet"],
+        lambda tmp: _stage_ivf_seed_routing(xframe, k, kc, str(tmp)),
     )
-
-    base = derived_dir(sf_dir) / f"ivf_seed_route_k{k}_c{kc}.parquet"
-    fp = source_fingerprint(Path(sf_dir) / "embeddings.parquet")
-    final = publish_fingerprinted(
-        base, fp, lambda tmp: _stage_ivf_seed_routing(xframe, k, kc, tmp)
-    )
-    reap_stale_fingerprints(base, keep=final)
-    return str(final)
+    return str(path)
 
 
 # NRM_FOLD: per-vector L2 norm computed ONCE map-side (cached with
@@ -2215,20 +2201,21 @@ def pq_codebooks_table(spark: SparkSession, sf_dir: str) -> str:
     Both engines consume only the PUBLISHED artifact (bit-identical
     6-dp operands), so the fit's float-reduction order never reaches
     a cross-engine boundary — the pca_components_table contract."""
-    import os
+    import pyarrow.parquet as pq
 
+    path = staged(
+        derived_dir(sf_dir) / "pq_codebooks.parquet",
+        [Path(sf_dir) / "embeddings.parquet"],
+        lambda tmp: pq.write_table(_pq_fit(spark, sf_dir), tmp),
+    )
+    return str(path)
+
+
+def _pq_fit(spark: SparkSession, sf_dir: str):
+    """The rounded codebook table pq_codebooks_table stages."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from kinesis_adapter_spark.sources.scans import source_fingerprint
-
-    out = derived_dir(sf_dir) / "pq_codebooks.parquet"
-    marker = derived_dir(sf_dir) / "pq_codebooks.parquet.src"
-    fp = source_fingerprint(Path(sf_dir) / "embeddings.parquet")
-    if out.exists() and marker.exists() and marker.read_text() == fp:
-        return str(out)
 
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -2316,11 +2303,7 @@ def pq_codebooks_table(spark: SparkSession, sf_dir: str) -> str:
             ),
         }
     )
-    tmp = out.parent / f"{out.name}.tmp-{os.getpid()}"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, out)
-    marker.write_text(fp)
-    return str(out)
+    return tbl
 
 
 def _pq_books(spark: SparkSession, sf_dir: str):

@@ -390,31 +390,25 @@ _UPDATES_FK_SQL = """
 def _mv_join_table(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per source generation) the denormalized join
     view orders ⋈ customer as a parquet artifact — the thing a real
-    pipeline maintains instead of re-deriving. Spark writes into a
-    data/ subdir so its own empty _SUCCESS cannot collide with the
-    fingerprint marker."""
-    from kinesis_adapter_spark.sources.scans import derived_dir, fresh_staging
+    pipeline maintains instead of re-deriving."""
+    from kinesis_adapter_spark.sources.scans import derived_dir
+    from kinesis_adapter_spark.staging import staged
     from pathlib import Path
 
-    out = derived_dir(sf_dir) / "mv_orders_customer"
-    staging = fresh_staging(out, Path(sf_dir))
-    data = out / "data"
-    if staging is not None:
-        done, fp = staging
+    def build(tmp: Path) -> None:
         o = load(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
         )
         c = load(spark, sf_dir, "customer").select(
             "c_custkey", "c_name", "c_mktsegment"
         )
-        (
-            o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .drop("c_custkey")
-            .write.mode("overwrite")
-            .parquet(str(data))
-        )
-        done.write_text(fp)
-    return str(data)
+        o.join(F.broadcast(c), o.o_custkey == c.c_custkey).drop(
+            "c_custkey"
+        ).write.parquet(str(tmp))
+
+    return str(
+        staged(derived_dir(sf_dir) / "mv_orders_customer", [Path(sf_dir)], build)
+    )
 
 
 @query(

@@ -1721,17 +1721,20 @@ def _materialize_iterative(
     FileNotFound a still-held frame from an earlier call, and two
     sf_dirs sharing a basename collide) — so a returned frame stays
     readable for the life of the run; the node-sized copies are
-    reaped with the run root, even after SIGKILL."""
+    reaped with the run root, even after SIGKILL. It is one output
+    per call, not a cache, so it does not go through staging.staged."""
     import hashlib
     import os
-    from kinesis_adapter_spark.staging import pid_staging_dir
+    from kinesis_adapter_spark.staging import run_root
 
+    seq = next(_ITER_STAGE_SEQ)
     # Evidence hook (VERDICT r16 item #4): the frame this helper
     # RETURNS is a read of the staged result, so a plan dump of the
     # declared key shows only Sort+Scan — the actual iterative loop
     # plan was never committed as evidence. With KAS_ITER_PLAN_DUMP
     # set (tools/dump_plan_r17.py), dump the PRE-materialization plan
-    # of the exact `out` about to execute.
+    # of the exact `out` about to execute, one file per call (ADVICE
+    # r17 #3: a multi-stage loop calls this more than once per key).
     dump_dir = os.environ.get("KAS_ITER_PLAN_DUMP")
     if dump_dir:
         import io
@@ -1741,15 +1744,12 @@ def _materialize_iterative(
         with redirect_stdout(buf):
             out.explain("formatted")
         Path(dump_dir).mkdir(parents=True, exist_ok=True)
-        (Path(dump_dir) / f"{name}_loop.txt").write_text(buf.getvalue())
+        (Path(dump_dir) / f"{name}_loop_{seq}.txt").write_text(buf.getvalue())
 
-    seq = next(_ITER_STAGE_SEQ)
     sf_tag = hashlib.md5(
         str(Path(sf_dir).resolve()).encode()
     ).hexdigest()[:12]
-    dest = str(
-        Path(pid_staging_dir(f"{name}")) / f"{sf_tag}-{seq}"
-    )
+    dest = f"{run_root()}/{name}/{sf_tag}-{seq}"
     try:
         # unique path per call: existence would be a bug, so error
         # instead of overwrite

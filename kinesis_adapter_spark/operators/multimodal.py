@@ -38,7 +38,6 @@ per-task byte load.
 from __future__ import annotations
 
 import hashlib
-import os
 
 from pathlib import Path
 
@@ -47,6 +46,7 @@ from pyspark.sql import functions as F
 
 from kinesis_adapter_spark.plans.registry import query
 from kinesis_adapter_spark.sources.scans import DERIVED_ROOT, derived_dir
+from kinesis_adapter_spark.staging import staged
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -266,11 +266,28 @@ def ensure_media_parquet(sf_dir: str) -> Path:
     """Derive media.parquet from documents: binary payload + typed
     metadata + plain-Python ground-truth feature columns. Also stages
     media_frames.parquet (per-sampled-frame ground truth for the video
-    stream decoder) in the same pass."""
-    out = derived_dir(sf_dir) / "media.parquet"
-    frames_out = derived_dir(sf_dir) / "media_frames.parquet"
-    if out.exists() and frames_out.exists():
-        return out
+    stream decoder) from the same pass; both are staged by the
+    documents.parquet fingerprint and the oracles read both names."""
+    import functools
+
+    import pyarrow.parquet as pq
+
+    tables = functools.cache(lambda: _media_tables(sf_dir))
+    src = [Path(sf_dir) / "documents.parquet"]
+    staged(
+        derived_dir(sf_dir) / "media_frames.parquet",
+        src,
+        lambda tmp: pq.write_table(tables()["frames"], tmp),
+    )
+    return staged(
+        derived_dir(sf_dir) / "media.parquet",
+        src,
+        lambda tmp: pq.write_table(tables()["media"], tmp),
+    )
+
+
+def _media_tables(sf_dir: str) -> dict:
+    """The media and media_frames tables ensure_media_parquet stages."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -397,25 +414,17 @@ def ensure_media_parquet(sf_dir: str) -> Path:
             ("gt_au_zero_cross", pa.int64()),
         ]
     )
-    ftmp = frames_out.with_suffix(".tmp")
-    pq.write_table(
-        pa.table(
-            frame_rows,
-            schema=pa.schema(
-                [
-                    ("media_id", pa.int64()),
-                    ("frame_id", pa.int64()),
-                    ("gt_frame_sha16", pa.string()),
-                ]
-            ),
+    frames = pa.table(
+        frame_rows,
+        schema=pa.schema(
+            [
+                ("media_id", pa.int64()),
+                ("frame_id", pa.int64()),
+                ("gt_frame_sha16", pa.string()),
+            ]
         ),
-        ftmp,
     )
-    os.replace(ftmp, frames_out)
-    tmp = out.with_suffix(".tmp")
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, out)
-    return out
+    return {"media": pa.table(rows, schema=schema), "frames": frames}
 
 
 def _media(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,7 +9,9 @@ oracle proves the optimization changes the execution shape only.
 
 from __future__ import annotations
 
-from kinesis_adapter_spark.staging import pid_staging_dir
+from pathlib import Path
+
+from kinesis_adapter_spark.staging import run_root, staged
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -155,7 +157,7 @@ def join_bucket_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_tag0 = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
     sf_tag = f"{sf_tag0}_{os.getpid()}"
-    db_dir = pid_staging_dir(f"kas_buckets_{sf_tag0}")
+    db_dir = f"{run_root()}/kas_buckets_{sf_tag0}"
     spark.conf.set("spark.sql.legacy.createHiveTableByDefault", "false")
     names = {"orders": f"kas_b_orders_{sf_tag}", "lineitem": f"kas_b_lineitem_{sf_tag}"}
     keys = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
@@ -302,19 +304,22 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     targeting ~1 GB objects; coalesce() would skip the shuffle but
     inherits upstream skew — repartition pays one shuffle for even
     output sizes."""
-    import os
+
+    def build(root: Path) -> None:
+        frag = str(root / "fragmented")
+        load(spark, sf_dir, "lineitem").repartition(64).write.parquet(frag)
+        spark.read.parquet(frag).repartition(4).write.parquet(
+            str(root / "compacted")
+        )
 
     sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    root = pid_staging_dir(f"kas_compact_{sf_tag}")
-    frag, compacted = f"{root}/fragmented", f"{root}/compacted"
-    if not os.path.exists(f"{compacted}/_SUCCESS"):
-        li = load(spark, sf_dir, "lineitem")
-        li.repartition(64).write.mode("overwrite").parquet(frag)
-        spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(
-            compacted
-        )
+    root = staged(
+        Path(run_root()) / f"kas_compact_{sf_tag}",
+        [Path(sf_dir) / "lineitem.parquet"],
+        build,
+    )
     return (
-        spark.read.parquet(compacted)
+        spark.read.parquet(str(root / "compacted"))
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -329,15 +334,16 @@ def _dpp_layout_path(spark: SparkSession, sf_dir: str) -> str:
     "o_orderpriority")`` — the directory-per-value layout dynamic
     partition pruning needs. Per-process staging avoids cross-process
     overwrite races (same rationale as the bucketed-join tables)."""
-    import os
-
     sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    path = pid_staging_dir(f"kas_dpp_{sf_tag}")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        load(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(path)
-    return path
+    return str(
+        staged(
+            Path(run_root()) / f"kas_dpp_{sf_tag}",
+            [Path(sf_dir) / "orders.parquet"],
+            lambda tmp: load(spark, sf_dir, "orders")
+            .write.partitionBy("o_orderpriority")
+            .parquet(str(tmp)),
+        )
+    )
 
 
 @query(
@@ -424,22 +430,19 @@ def cluster_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical across engines — the expression string is shared).
     At 100 TB this is the OPTIMIZE/ZORDER job table formats run after
     ingest; 8 bits per dimension is the standard truncation."""
-    import os
-
     o = load(spark, sf_dir, "orders")
     zkey = F.expr(_ZKEY_SQL).cast("bigint")
     sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    path = pid_staging_dir(f"kas_zorder_{sf_tag}")
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        (
-            o.withColumn("zkey", zkey)
-            .repartitionByRange(8, "zkey")
-            .sortWithinPartitions("zkey")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    path = staged(
+        Path(run_root()) / f"kas_zorder_{sf_tag}",
+        [Path(sf_dir) / "orders.parquet"],
+        lambda tmp: o.withColumn("zkey", zkey)
+        .repartitionByRange(8, "zkey")
+        .sortWithinPartitions("zkey")
+        .write.parquet(str(tmp)),
+    )
     return (
-        spark.read.parquet(path)
+        spark.read.parquet(str(path))
         .select("o_orderkey", "o_custkey", "zkey")
         .orderBy("zkey", "o_orderkey")
         .limit(50)
@@ -484,7 +487,7 @@ def join_cbo_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sf_tag0 = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
     sf_tag = f"{sf_tag0}_{os.getpid()}"
-    db_dir = pid_staging_dir(f"kas_cbo_{sf_tag0}")
+    db_dir = f"{run_root()}/kas_cbo_{sf_tag0}"
     spark.conf.set("spark.sql.legacy.createHiveTableByDefault", "false")
     # CBO confs are scoped to THIS query's optimization only: set,
     # eagerly pin the optimized plan, then restore (the
@@ -618,21 +621,18 @@ def scan_rowgroup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB: the same filter over an unsorted layout reads every row
     group because each one's [min,max] spans the full domain. Staging
     is per-process, same rationale as the bucketed tables."""
-    import os
-
     sf_tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
-    path = pid_staging_dir(f"kas_rowgroups_{sf_tag}") + "/events"
-    if not os.path.exists(f"{path}/_SUCCESS"):
-        (
-            load(spark, sf_dir, "events")
-            .select("event_id", "value")
-            .sort("value")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("parquet.block.size", 16 * 1024)
-            .parquet(path)
-        )
-    ev = spark.read.parquet(path)
+    path = staged(
+        Path(run_root()) / f"kas_rowgroups_{sf_tag}",
+        [Path(sf_dir) / "events.parquet"],
+        lambda tmp: load(spark, sf_dir, "events")
+        .select("event_id", "value")
+        .sort("value")
+        .coalesce(1)
+        .write.option("parquet.block.size", 16 * 1024)
+        .parquet(str(tmp)),
+    )
+    ev = spark.read.parquet(str(path))
     return ev.filter(F.col("value") >= 150).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum("value"), 4).alias("sum_value"),

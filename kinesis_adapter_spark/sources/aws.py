@@ -38,6 +38,15 @@ def endpoint_url() -> str:
     return f"http://127.0.0.1:{_PORT}"
 
 
+def last_sequence_number(shard) -> int:
+    """``moto.kinesis.models.Shard.get_max_sequence_number`` in O(1):
+    the last key of the shard's insertion-ordered record dict. Stock
+    moto builds ``list(self.records.keys())`` on every put, so a put's
+    cost grows with the shard and a long Kinesis pass slows down as
+    it goes. Same value as stock, 0 for an empty shard."""
+    return next(reversed(shard.records), 0)
+
+
 def ensure_moto_server() -> str:
     """Start the singleton moto server if not already running."""
     global _server
@@ -48,9 +57,11 @@ def ensure_moto_server() -> str:
                 return endpoint_url()
         import logging
 
+        from moto.kinesis.models import Shard
         from moto.server import ThreadedMotoServer
 
         logging.getLogger("werkzeug").setLevel(logging.ERROR)  # silence request spam
+        Shard.get_max_sequence_number = last_sequence_number
         server = ThreadedMotoServer(ip_address="127.0.0.1", port=_PORT, verbose=False)
         try:
             server.start()

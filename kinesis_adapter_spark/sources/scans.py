@@ -1,19 +1,18 @@
 """Scan sources and sinks (SURVEY.md §2.1-A).
 
 CSV/NDJSON fixtures are derived from the parquet tables into
-/tmp/kas_derived/<sf-basename>/ (never into the read-only testdata
-dir). Numeric formatting is pinned (%.2f for the 2-decimal `value`)
-so text round-trips reproduce the exact doubles, letting the oracles
-compare against the ORIGINAL events view — i.e. the whole
-export→parse path must be lossless to pass.
+/tmp/kas_derived/<version>/<sf-basename>/ (never into the read-only
+testdata dir), each through ``staging.staged`` keyed by the
+fingerprint of the tables it derives from. Numeric formatting is
+pinned (%.2f for the 2-decimal `value`) so text round-trips reproduce
+the exact doubles, letting the oracles compare against the ORIGINAL
+events view — i.e. the whole export→parse path must be lossless to
+pass.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import time
 import uuid
 from pathlib import Path
 
@@ -25,11 +24,12 @@ from pyspark.sql import functions as F
 from kinesis_adapter_spark.catalog import load
 from kinesis_adapter_spark.plans.registry import query
 from kinesis_adapter_spark.sources import aws
-from kinesis_adapter_spark.staging import ephemeral_file
+from kinesis_adapter_spark.staging import ephemeral_file, staged
 
 # Bump the version when any derived-fixture FORMAT changes: staged
-# fixtures are cached by existence checks, so a format change without a
-# new directory would silently serve stale data to later runs.
+# fixtures are keyed by their SOURCE fingerprint, not by the code that
+# wrote them, so a format change without a new directory would
+# silently serve stale data to later runs.
 # v2: fixtures changed events.ts to timestamp[us] — ts_ns derivation
 # fixed accordingly; v1 dirs may hold data staged from ns-era files.
 # v3: media.parquet image payloads became real P6 PPM rasters with
@@ -42,7 +42,11 @@ from kinesis_adapter_spark.staging import ephemeral_file
 # real netpbm P6 streams, with gt_au_* columns and a
 # media_frames.parquet ground-truth table; v4 dirs hold pseudo-bytes
 # for those modalities.
-DERIVED_VERSION = "v5"
+# v6: every artifact is staged by staging.staged — <name> is a symlink
+# to the build <name>@<fp16>, next to a .<name>.lock — instead of being
+# rebuilt in place under a fingerprint marker file; v5 trees hold the
+# in-place layout, which the symlink cannot replace.
+DERIVED_VERSION = "v6"
 DERIVED_ROOT = Path("/tmp/kas_derived") / DERIVED_VERSION
 
 
@@ -50,144 +54,6 @@ def derived_dir(sf_dir: str) -> Path:
     d = DERIVED_ROOT / Path(sf_dir).name
     d.mkdir(parents=True, exist_ok=True)
     return d
-
-
-def source_fingerprint(src: Path) -> str:
-    """Identity of a staged dir's SOURCE data: sizes + mtimes of the
-    files it derives from. Stored in the derived dir's _SUCCESS marker
-    and compared on reuse — derived_dir keys by basename only, so a
-    rebuilt source at the same path (a regenerated /root/testdata, or
-    scale_smoke re-materializing /tmp/kas_scale_xN after a fingerprint
-    mismatch) would otherwise silently serve stale staged data to
-    every later run (the ADVICE-r4 drift class)."""
-    if src.is_file():
-        files = [src]
-    else:
-        files = sorted(p for p in src.rglob("*") if p.is_file() and p.name != "_SUCCESS")
-    parts = []
-    for p in files:
-        st = p.stat()
-        parts.append(f"{p.name}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
-def fresh_staging(out: Path, src: Path) -> tuple[Path, str] | None:
-    """Return (marker, fingerprint) if ``out`` must be (re)staged from
-    ``src``; None when the cached staging is current. On a stale cache
-    the directory is cleared first."""
-    marker = out / "_SUCCESS"
-    fp = source_fingerprint(src)
-    if marker.exists() and marker.read_text() == fp:
-        return None
-    if out.exists():
-        shutil.rmtree(out)
-    out.mkdir(parents=True, exist_ok=True)
-    return marker, fp
-
-
-def publish_fingerprinted(base: Path, fp: str, stage_fn) -> Path:
-    """Content-addressed publication of a derived DIRECTORY artifact
-    (VERDICT r14 item #3): the final directory name embeds a hash of
-    the source fingerprint and is NEVER deleted or renamed-over once
-    published, so a reader holding the returned path can never hit the
-    delete-then-rename window a shared mutable name has when the
-    fingerprint changes (second-order: two concurrent engines on one
-    host). A fingerprint change simply publishes a NEW sibling; stale
-    siblings are collected by :func:`reap_stale_fingerprints`.
-
-    Concurrency: each stager builds under a pid-unique dot-tmp; the
-    first ``os.rename`` wins, a loser discards its tmp and reads the
-    winner's copy (content is deterministic from the fingerprinted
-    source, so copies are interchangeable). ``stage_fn(tmp_path)``
-    must create the artifact at exactly ``tmp_path``.
-    """
-    import hashlib
-
-    tag = hashlib.md5(fp.encode()).hexdigest()[:16]
-    final = base.parent / f"{base.stem}-{tag}{base.suffix}"
-    if final.exists():
-        return final
-    tmp = base.parent / f".{final.name}.tmp-{os.getpid()}"
-    # a prior attempt in THIS process may have left the tmp behind
-    # (stage_fn raised before the rename): clear it so a retry with a
-    # default-errorifexists stage_fn cannot fail on its own leftovers
-    # (ADVICE r15)
-    shutil.rmtree(tmp, ignore_errors=True)
-    stage_fn(str(tmp))
-    try:
-        os.rename(tmp, final)
-    except OSError:
-        shutil.rmtree(str(tmp), ignore_errors=True)  # concurrent winner
-    if not final.exists():
-        raise RuntimeError(
-            f"fingerprinted artifact publish failed: {final} does not "
-            "exist after rename (and no concurrent publisher supplied "
-            "it). Check staging-dir permissions/space; the tmp staging "
-            "was cleaned up."
-        )
-    return final
-
-
-def reap_stale_fingerprints(
-    base: Path, keep: Path, grace_sec: float = 1800.0
-) -> list[str]:
-    """Collect dead-fingerprint siblings of a content-addressed
-    artifact: every ``{base.stem}-*{base.suffix}`` entry other than
-    ``keep``, plus the legacy unfingerprinted ``base`` itself (and its
-    ``.src`` marker) from the pre-r15 mutable-name scheme. Deletion is
-    deferred while (a) the entry was published less than ``grace_sec``
-    ago or (b) another live kas run exists on this host — a concurrent
-    engine may still hold the stale path (it corresponds to
-    regenerated source data, so it is semantically dead, but it must
-    not FileNotFound mid-query). Returns the reaped names.
-
-    ASSUMPTION (VERDICT r15 'what's wrong' #3, documented rather than
-    closed): a frame returned by THIS process from an older
-    fingerprint is not protected once ``grace_sec`` has passed — the
-    own-process holder case. That window is unreachable while source
-    dirs are immutable for the life of a run (fingerprints only change
-    when the bytes under ``sf_dir`` change: true for /root/testdata
-    and for scale_smoke dirs, which re-materialize before any engine
-    run), so the grace covers only the cross-process republish storm.
-    A deployment with in-run-mutable sources must defer reaping while
-    its own run-root is live (tie the grace to run-root liveness) —
-    pinned by tests/test_catalog.py::
-    test_reap_same_process_window_is_documented_behavior."""
-    from kinesis_adapter_spark import staging
-
-    now = time.time()
-    reaped = []
-    candidates = [
-        p
-        for p in base.parent.glob(f"{base.stem}-*{base.suffix}")
-        if p != keep
-    ]
-    legacy = base.parent / base.name
-    if legacy.exists():
-        candidates.append(legacy)
-    # abandoned pid-tagged tmps (stager SIGKILLed mid-publish): reap
-    # only when the owning pid is dead, same age grace
-    for p in base.parent.glob(f".{base.stem}-*{base.suffix}.tmp-*"):
-        try:
-            owner = int(p.name.rsplit("-", 1)[-1])
-        except ValueError:
-            continue
-        if not staging._pid_alive(owner):
-            candidates.append(p)
-    for p in candidates:
-        try:
-            if now - p.stat().st_mtime < grace_sec:
-                continue
-        except OSError:
-            continue  # raced another reaper
-        if staging.live_foreign_runs():
-            break
-        shutil.rmtree(str(p), ignore_errors=True)
-        src_marker = p.parent / f"{p.name}.src"
-        if src_marker.exists():
-            src_marker.unlink(missing_ok=True)
-        reaped.append(p.name)
-    return reaped
 
 
 def _events_table(sf_dir: str):
@@ -208,22 +74,15 @@ def _events_table(sf_dir: str):
 
 
 def ensure_events_csv(sf_dir: str) -> Path:
-    """events → single CSV (event_id,user_id,event_type,value).
+    """events → single CSV (event_id,user_id,event_type,value)."""
 
-    Single-file staging, so the source fingerprint lives in a sibling
-    `.src` marker instead of a dir _SUCCESS (same invalidation contract
-    as fresh_staging — a regenerated events.parquet at the same path
-    must rebuild, never serve the stale CSV)."""
-    out = derived_dir(sf_dir) / "events.csv"
-    marker = derived_dir(sf_dir) / "events.csv.src"
-    fp = source_fingerprint(Path(sf_dir) / "events.parquet")
-    if not out.exists() or not marker.exists() or marker.read_text() != fp:
+    def build(tmp: Path) -> None:
         pdf = _events_table(sf_dir)[["event_id", "user_id", "event_type", "value"]]
-        tmp = out.with_suffix(".tmp")
         pdf.to_csv(tmp, index=False, float_format="%.2f")
-        os.replace(tmp, out)
-        marker.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "events.csv", [Path(sf_dir) / "events.parquet"], build
+    )
 
 
 def ensure_events_ndjson(sf_dir: str) -> Path:
@@ -232,10 +91,9 @@ def ensure_events_ndjson(sf_dir: str) -> Path:
     ts is exported as an ISO-µs string (the oracle's precision — DuckDB
     reads parquet NANOS at µs, SURVEY.md §5.3) plus the raw ns long.
     """
-    out = derived_dir(sf_dir) / "events_ndjson"
-    staging = fresh_staging(out, Path(sf_dir) / "events.parquet")
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         pdf = _events_table(sf_dir).sort_values("event_id")
         ts = pdf["ts"].astype("int64")
         pdf = pdf.assign(
@@ -246,7 +104,7 @@ def ensure_events_ndjson(sf_dir: str) -> Path:
             day=ts.astype("datetime64[ns]").dt.strftime("%Y%m%d"),
         )
         for day, grp in pdf.groupby("day"):
-            with open(out / f"events-{day}.json.tmp", "w") as f:
+            with open(out / f"events-{day}.json", "w") as f:
                 for r in grp.itertuples():
                     f.write(
                         json.dumps(
@@ -262,9 +120,10 @@ def ensure_events_ndjson(sf_dir: str) -> Path:
                         )
                         + "\n"
                     )
-            os.replace(out / f"events-{day}.json.tmp", out / f"events-{day}.json")
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "events_ndjson", [Path(sf_dir) / "events.parquet"], build
+    )
 
 
 EVENTS_JSON_SCHEMA = (
@@ -319,17 +178,13 @@ def roundtrip_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships natively): orders → ORC → scan back. The oracle reads the
     ORIGINAL parquet, so the round trip must be value-exact. ORC gets
     the same pushdown/pruning treatment as parquet at the scan."""
-    out = derived_dir(sf_dir) / "orders_orc"
-    staging = fresh_staging(out, Path(sf_dir) / "orders.parquet")
-    if staging is not None:
-        done, fp = staging
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-            .write.mode("overwrite")
-            .orc(str(out))
-        )
-        done.write_text(fp)  # after Spark's own empty _SUCCESS
+    out = staged(
+        derived_dir(sf_dir) / "orders_orc",
+        [Path(sf_dir) / "orders.parquet"],
+        lambda tmp: load(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        .write.orc(str(tmp)),
+    )
     return spark.read.orc(str(out))
 
 
@@ -471,14 +326,11 @@ def ensure_events_ndjson_dirty(sf_dir: str) -> Path:
     (truncated JSON, bare words, wrong-type field) — the realistic
     state of any at-scale ingest directory."""
     clean = ensure_events_ndjson(sf_dir)
-    out = derived_dir(sf_dir) / "events_ndjson_dirty"
-    staging = fresh_staging(out, clean)
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         for f in clean.glob("events-*.json"):
-            target = out / f.name
-            if not target.exists():
-                target.write_bytes(f.read_bytes())
+            (out / f.name).write_bytes(f.read_bytes())
         bad = [
             '{"event_id": 1, "user_id": ',  # truncated mid-token
             "not json at all",
@@ -489,11 +341,9 @@ def ensure_events_ndjson_dirty(sf_dir: str) -> Path:
             '"just a string with no object"trailing',  # trailing garbage
         ]
         assert len(bad) == N_BAD_LINES
-        tmp = out / "events-badlines.json.tmp"
-        tmp.write_text("\n".join(bad) + "\n")
-        tmp.rename(out / "events-badlines.json")
-        done.write_text(fp)
-    return out
+        (out / "events-badlines.json").write_text("\n".join(bad) + "\n")
+
+    return staged(derived_dir(sf_dir) / "events_ndjson_dirty", [clean], build)
 
 
 @query(
@@ -545,10 +395,9 @@ def ensure_parquet_evolving(sf_dir: str) -> Path:
     """Two parquet generations of the same logical table: gen1 is
     (doc_id, lang), gen2 adds n_chars — the normal state of a lake
     table after a schema migration."""
-    out = derived_dir(sf_dir) / "docs_evolving"
-    staging = fresh_staging(out, Path(sf_dir) / "documents.parquet")
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         pdf = pq.read_table(f"{sf_dir}/documents.parquet").to_pandas()
         pdf = pdf.sort_values("doc_id")
         gen1 = pdf[pdf.doc_id % 2 == 0][["doc_id", "lang"]]
@@ -559,8 +408,12 @@ def ensure_parquet_evolving(sf_dir: str) -> Path:
                        out / "gen1.parquet")
         pq.write_table(pa.Table.from_pandas(gen2, preserve_index=False),
                        out / "gen2.parquet")
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "docs_evolving",
+        [Path(sf_dir) / "documents.parquet"],
+        build,
+    )
 
 
 @query(
@@ -644,10 +497,9 @@ def ensure_media_files(sf_dir: str) -> Path:
     from kinesis_adapter_spark.operators.multimodal import ensure_media_parquet
 
     media = ensure_media_parquet(sf_dir)
-    out = derived_dir(sf_dir) / "media_files"
-    staging = fresh_staging(out, Path(sf_dir) / "documents.parquet")
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         tbl = pq.read_table(
             str(media), columns=["media_id", "media_type", "payload"]
         )
@@ -658,8 +510,10 @@ def ensure_media_files(sf_dir: str) -> Path:
         ):
             if mt == "image":
                 (out / f"media_{mid}.ppm").write_bytes(payload)
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "media_files", [Path(sf_dir) / "documents.parquet"], build
+    )
 
 
 @query(

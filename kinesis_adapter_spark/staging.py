@@ -40,16 +40,34 @@ Deliberately NOT parented under the run root (intentional cross-run
 caches, bounded to one dir per scale tag, each guarded by a source
 fingerprint): /tmp/kas_derived (staged fixtures + oracle artifacts)
 and /tmp/kas_scale_x<N> (scale-smoke materializations).
+
+Every cached artifact, cross-run or per-process, is made by ONE
+primitive, :func:`staged`. The caller picks the lifetime by the
+parent it passes: ``derived_dir(sf_dir)/<name>`` survives the run,
+``run_root()/<name>`` goes with this process's root. Beside the
+stable ``<name>`` sit the builds ``<name>@<fp16>`` (``fp16`` hashes
+the :func:`source_fingerprint` of the artifact's sources), a
+``.<name>.lock`` flock that serializes builders, and pid-tagged
+``.<name>@<fp16>.tmp-<pid>`` build dirs; ``<name>`` is a symlink
+re-pointed atomically at the newest build. A build is never deleted
+or renamed over while it can be current, so a reader holding a
+returned path cannot FileNotFound when another process rebuilds for
+a changed source, and two first builders build once.
 """
 
 from __future__ import annotations
 
 import atexit
+import fcntl
+import glob
+import hashlib
 import os
 import re
 import shutil
 import tempfile
 import threading
+import time
+from collections.abc import Callable, Iterable
 from pathlib import Path
 
 _LOCK = threading.Lock()
@@ -73,10 +91,10 @@ _LEGACY_PID_RE = re.compile(r"^kas_.*_([1-9]\d{2,7})$")
 
 def run_root() -> str:
     """This process's staging root, ``/tmp/kas_run_<pid>`` (created on
-    first use). Everything :func:`ephemeral_dir` /
-    :func:`pid_staging_dir` hand out lives under it, so the owning
-    pid is readable from the /tmp listing and a later process can
-    reap the whole root once this pid is dead."""
+    first use). Everything :func:`ephemeral_dir` hands out and every
+    process-lifetime :func:`staged` table lives under it, so the
+    owning pid is readable from the /tmp listing and a later process
+    can reap the whole root once this pid is dead."""
     root = Path(tempfile.gettempdir()) / f"kas_run_{os.getpid()}"
     root.mkdir(exist_ok=True)
     return _register(str(root))
@@ -109,18 +127,6 @@ def ephemeral_dir(prefix: str) -> str:
     d = _register(tempfile.mkdtemp(prefix=prefix, dir=run_root()))
     _manifest_note(d)
     return d
-
-
-def pid_staging_dir(name: str) -> str:
-    """A process-lifetime staging root: the SAME path for the life of
-    this process (callers fingerprint-cache layouts inside it across
-    calls — the bench's warm-run reuse depends on that), parented
-    under the run root so the dead-pid reaping convention covers it.
-    The path is NOT created here; callers stage into it with their
-    own _SUCCESS discipline."""
-    p = _register(str(Path(run_root()) / name))
-    _manifest_note(p)
-    return p
 
 
 def ephemeral_file(path: str) -> str:
@@ -216,6 +222,117 @@ def live_foreign_runs(tmp_root: str | None = None) -> list[str]:
         if pid is not None and pid != me and _pid_alive(pid):
             out.append(name)
     return out
+
+
+#: a stale build younger than this is kept: a reader in another
+#: process may still hold it
+REAP_GRACE_SEC = 1800.0
+
+
+def source_fingerprint(sources: Iterable[Path]) -> str:
+    """Identity of an artifact's SOURCE data: names, sizes and mtimes
+    of every file under each source path (a file or a directory).
+    Artifact names key by sf basename, so a rebuilt source at the same
+    path (regenerated test tables, or scale_smoke re-materializing
+    /tmp/kas_scale_xN) must change this value or every later run is
+    served stale data (the ADVICE-r4 drift class)."""
+    parts = []
+    for src in map(Path, sources):
+        files = [src] if src.is_file() else sorted(src.rglob("*"))
+        files = [p for p in files if p.is_file()]
+        for p in files:
+            st = p.stat()
+            parts.append(f"{p.name}:{st.st_size}:{st.st_mtime_ns}")
+    return "|".join(parts)
+
+
+def _remove(p: Path) -> None:
+    if p.is_dir() and not p.is_symlink():
+        shutil.rmtree(p, ignore_errors=True)
+    else:
+        p.unlink(missing_ok=True)
+
+
+def _link_target(link: Path) -> str | None:
+    try:
+        return os.readlink(link)
+    except OSError:
+        return None
+
+
+def staged(
+    path: Path, sources: Iterable[Path], build: Callable[[Path], object]
+) -> Path:
+    """The build of artifact ``path`` for the current ``sources``,
+    built by ``build(tmp)`` if there is none yet; returns the resolved
+    ``<name>@<fp16>`` path, never the ``<name>`` symlink, so a frame
+    read from it cannot re-resolve to another build after a swap.
+    ``build`` must create the artifact (a file or a directory) at
+    exactly ``tmp``; its content must follow from the sources alone.
+
+    A hit is one lock-free readlink compare. On a miss, under a flock
+    on ``.<name>.lock``: build into ``.<name>@<fp16>.tmp-<pid>``
+    unless another process already did, rename it to ``<name>@<fp16>``,
+    re-point the ``<name>`` symlink at it (``os.replace`` of a fresh
+    link), then reap stale builds of the name.
+
+    Reaping deletes a stale ``<name>@*`` build, or the tmp of a dead
+    builder, only once it is older than :data:`REAP_GRACE_SEC` and no
+    other live kas run exists on this host. A frame THIS process still
+    holds on a build older than the grace is NOT protected (pinned by
+    tests/test_catalog.py::test_reap_same_process_window_is_documented_behavior):
+    a build only goes stale when the bytes under its sources change,
+    which for the test tables and scale_smoke dirs never happens during
+    an engine run. A deployment with in-run-mutable sources must tie
+    the grace to its own run root's liveness."""
+    path = Path(path)
+    tag = hashlib.md5(source_fingerprint(sources).encode()).hexdigest()[:16]
+    final = path.with_name(f"{path.name}@{tag}")
+    if _link_target(path) == final.name:
+        return final
+    with open(path.with_name(f".{path.name}.lock"), "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if not final.exists():
+            tmp = path.with_name(f".{final.name}.tmp-{os.getpid()}")
+            try:
+                build(tmp)
+                os.rename(tmp, final)
+            except OSError:
+                _remove(tmp)
+                if not final.exists():  # not a builder that ignored the lock
+                    raise
+            except BaseException:
+                _remove(tmp)
+                raise
+        if _link_target(path) != final.name:
+            link = path.with_name(f".{path.name}@link.tmp-{os.getpid()}")
+            link.unlink(missing_ok=True)
+            os.symlink(final.name, link)
+            os.replace(link, path)
+        _reap(path, keep=final)
+    return final
+
+
+def _reap(path: Path, keep: Path) -> None:
+    """Delete stale builds of ``path`` and tmps of dead builders under
+    the grace rules of :func:`staged`."""
+    stem = glob.escape(path.name)
+    candidates = [p for p in path.parent.glob(f"{stem}@*") if p != keep]
+    for p in path.parent.glob(f".{stem}@*.tmp-*"):
+        owner = p.name.rsplit("-", 1)[-1]
+        if owner.isdigit() and not _pid_alive(int(owner)):
+            candidates.append(p)
+    now = time.time()
+    old = []
+    for p in candidates:
+        try:
+            if now - p.lstat().st_mtime >= REAP_GRACE_SEC:
+                old.append(p)
+        except OSError:
+            continue  # raced another reaper
+    if old and not live_foreign_runs():
+        for p in old:
+            _remove(p)
 
 
 atexit.register(cleanup_now)

@@ -37,7 +37,7 @@ running where protobuf is available.
 from __future__ import annotations
 
 import json
-from kinesis_adapter_spark.staging import ephemeral_dir
+from kinesis_adapter_spark.staging import ephemeral_dir, staged
 import uuid
 from pathlib import Path
 
@@ -50,7 +50,6 @@ from kinesis_adapter_spark.sources.scans import (
     EVENTS_JSON_SCHEMA,
     derived_dir,
     ensure_events_ndjson,
-    fresh_staging,
 )
 from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
 
@@ -67,10 +66,8 @@ def _ensure_doc_arrivals(sf_dir: str) -> Path:
     on every invocation)."""
     import pyarrow.parquet as pq
 
-    out = derived_dir(sf_dir) / "bm25_arrivals"
-    staging = fresh_staging(out, Path(sf_dir) / "documents.parquet")
-    if staging is not None:
-        done, fp = staging
+    def build(out: Path) -> None:
+        out.mkdir()
         tbl = pq.read_table(
             f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
         )
@@ -85,8 +82,12 @@ def _ensure_doc_arrivals(sf_dir: str) -> Path:
                     if d % 3 == b
                 )
             )
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "bm25_arrivals",
+        [Path(sf_dir) / "documents.parquet"],
+        build,
+    )
 
 
 def _ensure_event_arrivals(sf_dir: str) -> Path:
@@ -95,10 +96,8 @@ def _ensure_event_arrivals(sf_dir: str) -> Path:
     Same once-per-fingerprint contract as _ensure_doc_arrivals."""
     import pyarrow.parquet as pq
 
-    out = derived_dir(sf_dir) / "kmv_arrivals"
-    staging = fresh_staging(out, Path(sf_dir) / "events.parquet")
-    if staging is not None:
-        done, fp = staging
+    def build(out: Path) -> None:
+        out.mkdir()
         tbl = pq.read_table(
             f"{sf_dir}/events.parquet",
             columns=["event_id", "event_type", "user_id"],
@@ -118,8 +117,10 @@ def _ensure_event_arrivals(sf_dir: str) -> Path:
                     if e % 3 == b
                 )
             )
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "kmv_arrivals", [Path(sf_dir) / "events.parquet"], build
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None):
@@ -299,23 +300,26 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_ndjson_duped(sf_dir: str) -> Path:
     """events NDJSON with every file staged TWICE (duplicate
     deliveries — the reference's re-read failure mode). Shared by
-    stream_dedup and stream_dedup_ttl; fingerprinted via
-    fresh_staging so a regenerated events.parquet (or a
-    DERIVED_VERSION bump) restages instead of serving stale
-    duplicates — the r6 review caught the original bare-_STAGED /tmp
-    dir surviving fixture rebuilds (the ADVICE-r4 drift class)."""
+    stream_dedup and stream_dedup_ttl; staged by the events.parquet
+    fingerprint, so a regenerated events.parquet (or a DERIVED_VERSION
+    bump) restages instead of serving stale duplicates — the r6 review
+    caught the original bare-_STAGED /tmp dir surviving fixture
+    rebuilds (the ADVICE-r4 drift class)."""
     import shutil
 
     base = ensure_events_ndjson(sf_dir)
-    out = derived_dir(sf_dir) / "events_ndjson_duped"
-    staging = fresh_staging(out, Path(sf_dir) / "events.parquet")
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         for f in sorted(base.glob("events-*.json")):
             shutil.copy(f, out / f.name)
             shutil.copy(f, out / f"dup-{f.name}")
-        done.write_text(fp)
-    return out
+
+    return staged(
+        derived_dir(sf_dir) / "events_ndjson_duped",
+        [Path(sf_dir) / "events.parquet"],
+        build,
+    )
 
 
 @query(
@@ -501,14 +505,9 @@ def _events_ndjson_with_flush(sf_dir: str) -> Path:
     import shutil
 
     src = ensure_events_ndjson(sf_dir)
-    # dir name carries the sentinel-format version: fresh_staging keys
-    # on the SOURCE fingerprint only, so a sentinel-format change at
-    # the same source must change the directory to avoid serving the
-    # old staged layout (the stale-staging drift class, ADVICE r4)
-    out = derived_dir(sf_dir) / "events_ndjson_flush_s2"
-    staging = fresh_staging(out, Path(sf_dir) / "events.parquet")
-    if staging is not None:
-        done, fp = staging
+
+    def build(out: Path) -> None:
+        out.mkdir()
         for f in sorted(src.glob("events-*.json")):
             shutil.copy(f, out / f.name)
         flush_ns = 1_925_078_400_000_000_000  # 2031-01-01T00:00:00 UTC
@@ -529,8 +528,16 @@ def _events_ndjson_with_flush(sf_dir: str) -> Path:
         (out / "events-99991231-flush.json").write_text(
             "\n".join(lines) + "\n"
         )
-        done.write_text(fp)
-    return out
+
+    # the name carries the sentinel-format version: staged keys on the
+    # SOURCE fingerprint only, so a sentinel-format change at the same
+    # source must change the name to avoid serving the old staged
+    # layout (the stale-staging drift class, ADVICE r4)
+    return staged(
+        derived_dir(sf_dir) / "events_ndjson_flush_s2",
+        [Path(sf_dir) / "events.parquet"],
+        build,
+    )
 
 
 def _purchases_clicks_join(spark: SparkSession, sf_dir: str, how: str):
@@ -2381,10 +2388,8 @@ def stream_semdedup_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each arrival file is one filtered single-partition write, then
     # the part file is renamed into the NDJSON source dir (the corpus
     # is fixture-scale here; at 100 TB arrivals come from the bus).
-    src = derived_dir(sf_dir) / "semdedup_arrivals"
-    staging = fresh_staging(src, Path(sf_dir) / "embeddings.parquet")
-    if staging is not None:
-        done, fp = staging
+    def export(out: Path) -> None:
+        out.mkdir()
         for b in range(3):
             part_dir = work / f"part_{b}"
             (
@@ -2394,8 +2399,13 @@ def stream_semdedup_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .json(str(part_dir))
             )
             part = next(Path(part_dir).glob("part-*.json"))
-            part.rename(src / f"arrivals_{b}.json")
-        done.write_text(fp)
+            part.rename(out / f"arrivals_{b}.json")
+
+    src = staged(
+        derived_dir(sf_dir) / "semdedup_arrivals",
+        [Path(sf_dir) / "embeddings.parquet"],
+        export,
+    )
 
     docs = _semdedup_quality_docs(spark, sf_dir)
     index_batch = _semdedup_indexer(docs, k, kc, seed_table, meta_path)

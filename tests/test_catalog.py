@@ -17,6 +17,8 @@ import pytest
 
 from kinesis_adapter_spark import catalog
 
+REPO = Path(__file__).resolve().parent.parent
+
 
 @pytest.mark.parametrize("sf_dir", [
     "/root/testdata/sf0.001",
@@ -100,181 +102,170 @@ def test_memo_drops_aliased_entry(spark):
     assert out is not None
 
 
-def test_fresh_staging_rebuilds_on_source_change(tmp_path):
+def _regen(src: Path, gen: int) -> None:
+    """Rewrite a source file as generation ``gen`` (distinct size and
+    mtime, so its fingerprint changes)."""
+    src.write_bytes(b"gen-%d" % gen + b"!" * gen)
+    os.utime(src, ns=(gen * 10**9, gen * 10**9))
+
+
+def _dir_build(tag: str, calls: list | None = None):
+    def build(dest: Path) -> None:
+        if calls is not None:
+            calls.append(dest)
+        dest.mkdir()
+        (dest / "part-0").write_text(tag)
+
+    return build
+
+
+def test_staged_rebuilds_on_source_change(tmp_path):
     """r5 review: derived caches must rebuild when their SOURCE data
     changes at the same path (regenerated testdata / re-materialized
-    scaled dirs), not trust a bare _SUCCESS marker."""
-    import os
-    import time
-
-    from kinesis_adapter_spark.sources.scans import fresh_staging
+    scaled dirs), not trust a bare marker; an unchanged source is a
+    hit that never re-stages, and the stable name follows the newest
+    build."""
+    from kinesis_adapter_spark.staging import staged
 
     src = tmp_path / "src.parquet"
-    src.write_bytes(b"gen-one")
-    out = tmp_path / "derived"
+    _regen(src, 1)
+    art = tmp_path / "derived"
+    calls: list = []
 
-    staging = fresh_staging(out, src)
-    assert staging is not None
-    marker, fp = staging
-    (out / "data.txt").write_text("staged-from-gen-one")
-    marker.write_text(fp)
+    first = staged(art, [src], _dir_build("staged-from-gen-one", calls))
+    assert first.name.startswith("derived@") and first != art
+    assert (first / "part-0").read_text() == "staged-from-gen-one"
+    assert art.is_symlink() and art.resolve() == first.resolve()
 
     # unchanged source -> cache hit
-    assert fresh_staging(out, src) is None
-    assert (out / "data.txt").read_text() == "staged-from-gen-one"
-
-    # regenerate the source (new mtime/size) -> stale dir is cleared
-    time.sleep(0.01)
-    src.write_bytes(b"gen-two!!")
-    os.utime(src)
-    staging2 = fresh_staging(out, src)
-    assert staging2 is not None
-    assert not (out / "data.txt").exists(), "stale staging survived"
-
-
-def test_publish_fingerprinted_content_addressed(tmp_path):
-    """VERDICT r14 item #3: a fingerprint change publishes a NEW
-    sibling directory — the old one is never deleted or renamed-over,
-    so a concurrent reader's path stays valid; a cache hit never
-    re-stages; a lost rename race falls back to the winner's copy."""
-    from kinesis_adapter_spark.sources.scans import publish_fingerprinted
-
-    base = tmp_path / "art.parquet"
-    calls = []
-
-    def stage(dest):
-        calls.append(dest)
-        p = Path(dest)
-        p.mkdir()
-        (p / "part-0").write_text("v1")
-
-    final_a = publish_fingerprinted(base, "fp-A", stage)
-    assert final_a.exists() and (final_a / "part-0").read_text() == "v1"
-    assert final_a.name != base.name  # tag embedded in the name
-    # cache hit: same fp, no restage
-    assert publish_fingerprinted(base, "fp-A", stage) == final_a
+    assert staged(art, [src], _dir_build("never", calls)) == first
     assert len(calls) == 1
 
-    # fingerprint miss (regenerated source): republish as a SIBLING,
-    # the old artifact untouched — the race-window class is gone
-    def stage2(dest):
-        calls.append(dest)
-        p = Path(dest)
-        p.mkdir()
-        (p / "part-0").write_text("v2")
+    # regenerate the source (new mtime/size) -> a new build
+    _regen(src, 2)
+    second = staged(art, [src], _dir_build("staged-from-gen-two", calls))
+    assert second != first and len(calls) == 2, "stale staging served"
+    assert (second / "part-0").read_text() == "staged-from-gen-two"
+    assert (art / "part-0").read_text() == "staged-from-gen-two"
 
-    final_b = publish_fingerprinted(base, "fp-B", stage2)
-    assert final_b != final_a and len(calls) == 2
+
+def test_staged_content_addressed(tmp_path):
+    """VERDICT r14 item #3: a fingerprint change publishes a NEW
+    sibling build — the old one is never deleted or renamed-over, so a
+    concurrent reader's path stays valid; a single-file artifact works
+    the same way; a builder that ignored the lock and won the rename
+    leaves the loser serving the winner's copy with no tmp behind."""
+    from kinesis_adapter_spark.staging import staged
+
+    src = tmp_path / "src.parquet"
+    _regen(src, 1)
+    art = tmp_path / "art.parquet"
+    final_a = staged(art, [src], _dir_build("v1"))
+    _regen(src, 2)
+    final_b = staged(art, [src], _dir_build("v2"))
+    assert final_b != final_a
     assert (final_a / "part-0").read_text() == "v1"  # still readable
     assert (final_b / "part-0").read_text() == "v2"
 
-    # lost rename race: a concurrent winner created the final mid-
-    # stage; the loser must discard its tmp and serve the winner's
-    def stage_racing(dest):
-        p = Path(dest)
-        p.mkdir()
-        (p / "part-0").write_text("loser")
-        winner = base.parent / Path(dest).name.split(".tmp-")[0][1:]
+    one = staged(tmp_path / "one.csv", [src], lambda t: t.write_text("a,b\n"))
+    assert one.is_file() and one.read_text() == "a,b\n"
+    assert (tmp_path / "one.csv").read_text() == "a,b\n"
+
+    # lost rename race: a winner created the final build mid-stage
+    def stage_racing(dest: Path) -> None:
+        dest.mkdir()
+        (dest / "part-0").write_text("loser")
+        winner = dest.with_name(dest.name.split(".tmp-")[0][1:])
         winner.mkdir()
         (winner / "part-0").write_text("winner")
 
-    final_c = publish_fingerprinted(base, "fp-C", stage_racing)
+    _regen(src, 3)
+    final_c = staged(art, [src], stage_racing)
     assert (final_c / "part-0").read_text() == "winner"
     assert not list(tmp_path.glob(".*tmp*")), "loser tmp not cleaned"
 
 
-def test_reap_stale_fingerprints(tmp_path, monkeypatch):
-    """Dead-fingerprint siblings, the legacy shared-name artifact (and
-    its .src marker), and dead-pid tmps are collected once past the
-    age grace and with no live foreign run; the kept artifact and
-    young/live entries survive."""
+def test_staged_reaps_stale_builds(tmp_path, monkeypatch):
+    """Stale builds and dead-pid tmps are collected on the next miss
+    once past the age grace and with no live foreign run; the current
+    build and young/live entries survive, and a live foreign run
+    defers ALL reaping."""
     from kinesis_adapter_spark import staging
-    from kinesis_adapter_spark.sources.scans import reap_stale_fingerprints
 
     monkeypatch.setattr(staging, "live_foreign_runs", lambda: [])
-    base = tmp_path / "art.parquet"
-    keep = tmp_path / "art-aaaa.parquet"
-    stale = tmp_path / "art-bbbb.parquet"
-    legacy = tmp_path / "art.parquet"
-    for d in (keep, stale, legacy):
-        d.mkdir()
-    (tmp_path / "art.parquet.src").write_text("fp")
-    dead_tmp = tmp_path / ".art-cccc.parquet.tmp-999999"
+    src = tmp_path / "src.parquet"
+    art = tmp_path / "art.parquet"
+    stale = tmp_path / "art.parquet@bbbb"
+    stale.mkdir()
+    (tmp_path / "art.parquet@cccc").write_text("single-file build")
+    dead_tmp = tmp_path / ".art.parquet@dddd.tmp-999999"
     dead_tmp.mkdir()
-    live_tmp = tmp_path / f".art-dddd.parquet.tmp-{os.getpid()}"
+    live_tmp = tmp_path / f".art.parquet@eeee.tmp-{os.getpid()}"
     live_tmp.mkdir()
+    other = tmp_path / "art.parquet_other@ffff"  # another artifact's build
+    other.mkdir()
     old = time.time() - 3600
-    for d in (stale, legacy, dead_tmp, live_tmp):
-        os.utime(d, (old, old))
-
-    # young entries survive even when stale
-    young = tmp_path / "art-eeee.parquet"
+    for p in (stale, tmp_path / "art.parquet@cccc", dead_tmp, live_tmp, other):
+        os.utime(p, (old, old))
+    young = tmp_path / "art.parquet@aaaa"
     young.mkdir()
-    reaped = reap_stale_fingerprints(base, keep=keep, grace_sec=1800.0)
-    assert sorted(reaped) == [
-        ".art-cccc.parquet.tmp-999999", "art-bbbb.parquet", "art.parquet",
-    ]
-    assert keep.exists() and young.exists() and live_tmp.exists()
-    assert not stale.exists() and not legacy.exists()
-    assert not (tmp_path / "art.parquet.src").exists()
 
-    # a live foreign run defers ALL reaping
+    _regen(src, 1)
+    keep = staging.staged(art, [src], _dir_build("v1"))
+    survivors = {p.name for p in tmp_path.iterdir()}
+    assert keep.name in survivors and young.name in survivors
+    assert live_tmp.name in survivors and other.name in survivors
+    for gone in (stale, tmp_path / "art.parquet@cccc", dead_tmp):
+        assert gone.name not in survivors, gone
+
+    # a live foreign run defers ALL reaping, the old build included
     os.utime(young, (old, old))
+    os.utime(keep, (old, old))
     monkeypatch.setattr(staging, "live_foreign_runs", lambda: ["kas_run_1"])
-    assert reap_stale_fingerprints(base, keep=keep, grace_sec=0.0) == []
-    assert young.exists()
+    _regen(src, 2)
+    staging.staged(art, [src], _dir_build("v2"))
+    assert young.exists() and keep.exists()
 
 
 def test_reap_same_process_window_is_documented_behavior(
     tmp_path, monkeypatch
 ):
     """VERDICT r15 'what's wrong' #3, closed by documentation: a
-    stale-fingerprint sibling older than the grace IS reaped even when
-    the reaping process itself could still hold a frame on it — the
-    own-process holder is NOT protected (only foreign live runs defer
-    reaping). This pin exists so the docstring's immutable-source
-    assumption stays honest: if someone later adds own-run protection,
-    this test flips and the docstring must be updated with it."""
+    stale build older than the grace IS reaped even when the reaping
+    process itself could still hold a frame on it — the own-process
+    holder is NOT protected (only foreign live runs defer reaping).
+    This pin exists so staged()'s immutable-source assumption stays
+    honest: if someone later adds own-run protection, this test flips
+    and the docstring must be updated with it."""
     from kinesis_adapter_spark import staging
-    from kinesis_adapter_spark.sources.scans import reap_stale_fingerprints
 
     monkeypatch.setattr(staging, "live_foreign_runs", lambda: [])
-    base = tmp_path / "art.parquet"
-    keep = tmp_path / "art-aaaa.parquet"
-    own_stale = tmp_path / "art-bbbb.parquet"  # "held" by this process
-    for d in (keep, own_stale):
-        d.mkdir()
+    src = tmp_path / "src.parquet"
+    art = tmp_path / "art.parquet"
+    _regen(src, 1)
+    own_stale = staging.staged(art, [src], _dir_build("v1"))  # "held"
     old = time.time() - 3600
     os.utime(own_stale, (old, old))
-    reaped = reap_stale_fingerprints(base, keep=keep, grace_sec=1800.0)
-    assert reaped == ["art-bbbb.parquet"]
+    _regen(src, 2)
+    keep = staging.staged(art, [src], _dir_build("v2"))
+    assert keep.exists()
     assert not own_stale.exists()  # the documented window, pinned
 
 
-def test_publish_fingerprinted_concurrent_reader(tmp_path):
-    """The two-process race the content-addressed scheme exists to
-    close (VERDICT r14 item #3): a second engine holding a published
-    artifact path must NEVER hit FileNotFound while this engine
-    republishes changed fingerprints and runs the reaper — publication
-    never deletes, and reaping defers via the age grace."""
+def test_staged_concurrent_reader(tmp_path):
+    """The two-process race content addressing exists to close
+    (VERDICT r14 item #3): a second engine holding a returned build
+    path must NEVER hit FileNotFound while this engine rebuilds for
+    changed fingerprints and reaps — a build is never deleted while
+    current, and reaping defers via the age grace."""
     import multiprocessing as mp
 
-    from kinesis_adapter_spark.sources.scans import (
-        publish_fingerprinted,
-        reap_stale_fingerprints,
-    )
+    from kinesis_adapter_spark.staging import staged
 
-    base = tmp_path / "art.parquet"
-
-    def stage_v(tag):
-        def stage(dest):
-            p = Path(dest)
-            p.mkdir()
-            (p / "part-0").write_text(tag)
-
-        return stage
-
-    first = publish_fingerprinted(base, "fp-0", stage_v("v0"))
+    src = tmp_path / "src.parquet"
+    art = tmp_path / "art.parquet"
+    _regen(src, 1)
+    first = staged(art, [src], _dir_build("v0"))
     stop = mp.Event()
     errs: "mp.Queue" = mp.Queue()
 
@@ -291,13 +282,80 @@ def test_publish_fingerprinted_concurrent_reader(tmp_path):
     proc = mp.Process(target=reader, args=(str(first),))
     proc.start()
     try:
-        for i in range(1, 40):
-            final = publish_fingerprinted(base, f"fp-{i}", stage_v(f"v{i}"))
-            # default grace defers deletion of young siblings — the
-            # reader's fp-0 copy survives the whole republish storm
-            reap_stale_fingerprints(base, keep=final)
+        for i in range(2, 41):
+            _regen(src, i)
+            staged(art, [src], _dir_build(f"v{i}"))
     finally:
         stop.set()
         proc.join(10)
     assert errs.get(timeout=10) is None, "concurrent reader hit an error"
     assert (first / "part-0").read_text() == "v0"
+
+
+def test_staged_two_processes_first_build_once(tmp_path):
+    """Two processes asking for the same missing artifact at once: the
+    flock makes one build and the other wait for it — ``build`` runs
+    once, both get the same path, and no tmp is left behind."""
+    import subprocess
+    import sys
+
+    src = tmp_path / "src.parquet"
+    _regen(src, 1)
+    log = tmp_path / "builds.log"
+    go = time.time() + 3.0
+    code = (
+        "import sys, time\n"
+        f"sys.path.insert(0, {str(REPO)!r})\n"
+        "from pathlib import Path\n"
+        "from kinesis_adapter_spark.staging import staged\n"
+        "def build(dest):\n"
+        f"    with open({str(log)!r}, 'a') as f:\n"
+        "        f.write('built\\n')\n"
+        "    time.sleep(1.5)\n"
+        "    dest.mkdir()\n"
+        "    (dest / 'part-0').write_text('v1')\n"
+        f"time.sleep(max(0.0, {go!r} - time.time()))\n"
+        f"print(staged(Path({str(tmp_path / 'art')!r}), "
+        f"[Path({str(src)!r})], build))\n"
+    )
+    procs = [
+        subprocess.Popen([sys.executable, "-c", code], stdout=subprocess.PIPE, text=True)
+        for _ in range(2)
+    ]
+    outs = [p.communicate(timeout=120)[0].strip() for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    assert outs[0] == outs[1] and Path(outs[0]).is_dir(), outs
+    assert log.read_text() == "built\n"
+    assert not list(tmp_path.glob(".*tmp*")), "tmp left behind"
+
+
+def test_capped_shingle_table_keys_by_source_not_basename(spark, tmp_path):
+    """ADVICE r17 #2: in one process, two sf dirs that share a basename
+    but hold different documents.parquet must get different capped-
+    shingle tables — each the table of its own corpus."""
+    import pyarrow.parquet as pq
+
+    from tests.oracle import SF_FAST
+    from kinesis_adapter_spark.operators.llmops import (
+        capped_shingle_table,
+        capped_shingles,
+        mutated_documents,
+    )
+
+    docs = pq.read_table(f"{SF_FAST}/documents.parquet")
+    half = docs.num_rows // 2
+    dirs = []
+    for name, part in (("a", docs.slice(0, half)), ("b", docs.slice(half))):
+        d = tmp_path / name / "sfX"
+        d.mkdir(parents=True)
+        pq.write_table(part, d / "documents.parquet")
+        dirs.append(str(d))
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("doc_id", "s").collect())
+
+    paths = [capped_shingle_table(spark, d) for d in dirs]
+    assert paths[0] != paths[1]
+    for d, path in zip(dirs, paths):
+        want = rows(capped_shingles(mutated_documents(spark, d)))
+        assert want and rows(spark.read.parquet(path)) == want, d

@@ -236,14 +236,15 @@ def test_bench_detail_artifact_is_fresh_and_consistent():
 
 def test_staging_module_cleans_registered_paths(tmp_path):
     """End-to-end contract of kinesis_adapter_spark.staging: ephemeral
-    dirs, pid staging roots, the per-run kas_run_<pid> root itself,
-    and registered files are all removed when the registering
-    interpreter EXITS (the real atexit path, probed in a subprocess —
-    calling cleanup_now() in-process here would drain this pytest
-    session's own live registrations, wiping caches other tests still
-    reuse). r13 additions: both dir flavors must live UNDER the run
-    root (the dead-pid reaping convention) and be recorded in its
-    MANIFEST."""
+    dirs, process-lifetime staged tables, the per-run kas_run_<pid>
+    root itself, and registered files are all removed when the
+    registering interpreter EXITS (the real atexit path, probed in a
+    subprocess — calling cleanup_now() in-process here would drain
+    this pytest session's own live registrations, wiping caches other
+    tests still reuse). r13 additions: both dir flavors must live
+    UNDER the run root (the dead-pid reaping convention); ephemeral
+    dirs and files are recorded in its MANIFEST, staged tables are
+    covered by the root itself."""
     import os
     import subprocess
     import sys
@@ -256,14 +257,14 @@ def test_staging_module_cleans_registered_paths(tmp_path):
         "root = staging.run_root()\n"
         "assert root.endswith(f'kas_run_{os.getpid()}')\n"
         "d1 = staging.ephemeral_dir('kas_test_eph_')\n"
-        "d2 = staging.pid_staging_dir('kas_test_pid')\n"
-        "os.makedirs(d2, exist_ok=True)\n"
+        "from pathlib import Path\n"
+        "d2 = str(staging.staged(Path(root) / 'kas_test_pid', [], Path.mkdir))\n"
         "assert d1.startswith(root + os.sep) and d2.startswith(root + os.sep)\n"
         f"f1 = staging.ephemeral_file(os.path.join({str(tmp_path)!r}, 'kas_test.lock'))\n"
         "open(f1, 'w').close()\n"
         "manifest = open(os.path.join(root, 'MANIFEST')).read().splitlines()\n"
-        "assert {d1, d2, f1} <= set(manifest), manifest\n"
-        "assert {root, d1, d2, f1} <= staging.registered_paths()\n"
+        "assert {d1, f1} <= set(manifest), manifest\n"
+        "assert {root, d1, f1} <= staging.registered_paths()\n"
         "for p in (root, d1, d2, f1):\n"
         "    assert os.path.exists(p)\n"
         f"open({str(out)!r}, 'w').write('\\n'.join([root, d1, d2, f1]))\n"
@@ -300,7 +301,8 @@ def test_staging_reaps_dead_pid_residue(tmp_path):
         f"tempfile.tempdir = {str(tmp_path)!r}\n"
         "from kinesis_adapter_spark import staging\n"
         "staging.ephemeral_dir('kas_test_eph_')\n"
-        "os.makedirs(staging.pid_staging_dir('kas_test_pid'), exist_ok=True)\n"
+        "from pathlib import Path\n"
+        "staging.staged(Path(staging.run_root()) / 'kas_test_pid', [], Path.mkdir)\n"
         "print('ready', flush=True)\n"
         "time.sleep(300)\n"
     )

@@ -283,11 +283,11 @@ def test_compaction_reduces_file_count_losslessly(spark):
     oracle already proves value equality)."""
     from pathlib import Path
 
-    from kinesis_adapter_spark.staging import pid_staging_dir
+    from kinesis_adapter_spark.staging import run_root
 
     QUERIES["compact_small_files"](spark, SF_TEST).collect()  # stage
     sf_tag = SF_TEST.rstrip("/").split("/")[-1].replace(".", "_")
-    root = Path(pid_staging_dir(f"kas_compact_{sf_tag}"))
+    root = Path(run_root()) / f"kas_compact_{sf_tag}"  # the newest build
     frag = len(list((root / "fragmented").glob("part-*.parquet")))
     comp = len(list((root / "compacted").glob("part-*.parquet")))
     assert frag == 64 and comp <= 4, (frag, comp)
@@ -305,11 +305,11 @@ def test_zorder_localizes_both_dimensions(spark):
     import pyarrow.parquet as pq_
     from pathlib import Path
 
-    from kinesis_adapter_spark.staging import pid_staging_dir
+    from kinesis_adapter_spark.staging import run_root
 
     QUERIES["cluster_zorder"](spark, SF_TEST).collect()  # stage layout
     sf_tag = SF_TEST.rstrip("/").split("/")[-1].replace(".", "_")
-    root = Path(pid_staging_dir(f"kas_zorder_{sf_tag}"))
+    root = Path(run_root()) / f"kas_zorder_{sf_tag}"  # the newest build
     spans = {"o_custkey": [], "o_orderkey": []}
     for f in root.glob("part-*.parquet"):
         t = pq_.read_table(f, columns=["o_custkey", "o_orderkey"])

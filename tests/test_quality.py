@@ -3575,6 +3575,29 @@ def test_materialize_iterative_per_call_paths(spark, tmp_path):
     assert f1.count() == 3 and f2.count() == 5 and f3.count() == 7
 
 
+def test_materialize_iterative_dumps_every_loop_plan(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r17 #3: with KAS_ITER_PLAN_DUMP set, each call names its
+    loop-plan file by its stage sequence number, so a key that loops
+    through the helper twice keeps both plans (was: one
+    ``<name>_loop.txt`` overwritten by the second call)."""
+    from kinesis_adapter_spark.operators.insights import (
+        _materialize_iterative,
+    )
+
+    dump = tmp_path / "plans"
+    monkeypatch.setenv("KAS_ITER_PLAN_DUMP", str(dump))
+    for n in (3, 5):
+        _materialize_iterative(
+            spark, spark.range(n).selectExpr("id AS v"), "iterdump",
+            str(tmp_path), release=(),
+        )
+    plans = sorted(dump.glob("iterdump_loop*.txt"))
+    assert len(plans) == 2, plans
+    assert all("Range" in p.read_text() for p in plans)
+
+
 def test_bench_probe_guard_respects_budget():
     """bench._probe returns a sane sub-second reading and
     _wait_until_cool honors its wait budget even when the threshold is

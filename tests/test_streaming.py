@@ -933,3 +933,19 @@ def test_semdedup_maintain_kill_resume_with_replayed_batch(spark, tmp_path):
         for r in QUERIES["pipeline_semantic_dedup_ivf"](spark, sf).collect()
     ]
     assert got == ref
+
+
+def test_moto_last_sequence_number_matches_stock():
+    """The O(1) sequence lookup ensure_moto_server installs returns the
+    number stock moto's ``list(self.records.keys())[-1]`` does, on an
+    empty shard and on a shard of N records."""
+    from moto.kinesis.models import Shard
+
+    from kinesis_adapter_spark.sources.aws import last_sequence_number
+
+    shard = Shard(0, 0, 2**128)
+    assert last_sequence_number(shard) == 0
+    for i in range(300):
+        seq = shard.put_record(f"k{i % 7}", f"d{i}", None)
+        assert last_sequence_number(shard) == list(shard.records.keys())[-1]
+        assert last_sequence_number(shard) == int(seq) == i + 1
