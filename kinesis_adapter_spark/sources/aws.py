@@ -5,11 +5,11 @@ network and no hadoop-aws/kinesis JVM connectors (SURVEY.md §0.3), so
 AWS APIs are served by a moto ThreadedMotoServer on 127.0.0.1 and all
 clients talk to it via ``endpoint_url``.
 
-Why a *server* and not ``mock_aws()``: Spark's Python workers are
-separate processes — an in-process mock patches only the driver. An
-HTTP endpoint works from every worker, which keeps the production
-shape (each partition writes its own batches) testable locally. In
-production the same code runs with the endpoint_url removed.
+Why a *server* and not ``mock_aws()``: an in-process mock patches
+only the process that enters it, while one emulator on a port serves
+every process of the host alike (pytest workers, a benchmark and its
+own emulator process). In production the same code runs with the
+endpoint_url removed.
 """
 
 from __future__ import annotations
@@ -18,11 +18,9 @@ import atexit
 import json
 import re
 import socket
-import sys
 import time
 
 import boto3
-from pyspark import cloudpickle
 
 _PORT = 5123
 _server = None
@@ -138,12 +136,13 @@ def read_all_records(stream: str) -> list[dict]:
 PUT_MAX_RECORDS = 500
 PUT_MAX_CALL_BYTES = 5 << 20
 PUT_MAX_RECORD_BYTES = 1 << 20
+PUT_MAX_KEY_CHARS = 256
 
 
 def moto_lock_path(stream: str) -> str:
-    """The put-lock file of one stream (see ``moto_put_lock``). Callers
-    register it for removal on the driver; the lock itself only opens
-    it, so it runs on executors that cannot import this package."""
+    """The put-lock file of one stream (see ``moto_put_lock``). The
+    caller that creates the stream registers it for removal; the lock
+    itself only opens it."""
     return "/tmp/kas_moto_put.%s.lock" % re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
 
 
@@ -152,8 +151,9 @@ class moto_put_lock:
     emulator: moto's in-memory Kinesis backend drops records under
     concurrent puts (measured: 7998/8000 with 8 writer threads). Real
     Kinesis is concurrent-safe — production runs (no local endpoint)
-    skip the lock entirely. flock works across the Python worker
-    processes of a local[*] session because they share the host.
+    skip the lock entirely. Every put of the package runs on the
+    driver, but two sinks or processes can still put to one stream at
+    once; flock serializes them because they share the host.
 
     The lock file is keyed by STREAM name (ADVICE r01): moto's drop
     happens on concurrent puts to one in-memory stream, so unrelated
@@ -214,17 +214,24 @@ def put_records_with_retry(
     §2.0): a call carries at most 500 records and 5 MiB of Data plus
     PartitionKey; individual records can fail (throttling) while the
     call succeeds — those are re-enqueued with exponential backoff. A
-    record over 1 MiB can never be put, so it raises ``ValueError``
+    record over 1 MiB, or whose PartitionKey is empty or longer than
+    256 characters, can never be put, so it raises ``ValueError``
     before anything is sent. Returns records delivered.
 
-    Every PutRecords of the package goes through here, on the driver
-    and in executor closures alike (see ``partition_writer``)."""
+    Every PutRecords of the package goes through here, from the
+    driver."""
     sizes = [_record_bytes(rec) for rec in records]
-    for n in sizes:
+    for rec, n in zip(records, sizes):
         if n > PUT_MAX_RECORD_BYTES:
             raise ValueError(
                 f"Kinesis record of {n} bytes for stream {stream!r} exceeds "
                 f"the {PUT_MAX_RECORD_BYTES}-byte PutRecords record limit"
+            )
+        k = len(rec["PartitionKey"])
+        if not 1 <= k <= PUT_MAX_KEY_CHARS:
+            raise ValueError(
+                f"Kinesis PartitionKey of {k} characters for stream {stream!r} "
+                f"is outside the 1-{PUT_MAX_KEY_CHARS} PutRecords key limit"
             )
     delivered = 0
     lock = moto_put_lock(
@@ -262,21 +269,3 @@ def row_records(rows, pk_col: str = "pk") -> list[dict]:
         pk = str(d.pop(pk_col))
         out.append({"Data": json.dumps(d).encode(), "PartitionKey": pk})
     return out
-
-
-def partition_writer(stream: str, endpoint: str, aws_kw: dict, pk_col: str = "pk"):
-    """A ``foreachPartition`` function that puts its partition's rows
-    (``row_records``) through ``put_records_with_retry`` with its own
-    client. It closes over plain values only, so it pickles."""
-
-    def write_partition(rows):
-        kin = boto3.client("kinesis", endpoint_url=endpoint, **aws_kw)
-        put_records_with_retry(kin, stream, row_records(rows, pk_col))
-
-    return write_partition
-
-
-# Executors need not have this package importable: functions of this
-# module sent to them (``partition_writer``'s closure and what it calls)
-# are pickled by value.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])

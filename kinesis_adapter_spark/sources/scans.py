@@ -286,24 +286,24 @@ def source_s3_moto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sink_kinesis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's SINK stage, batch form: partition-parallel
-    PutRecords (≤500/call, retry w/ backoff) into moto Kinesis, then
-    drain all shards and hand the payloads back as a DataFrame — the
-    oracle compares against the original events, so the full
-    serialize→put→shard→get round-trip must be lossless.
+    """The reference's SINK stage, batch form: PutRecords (≤500/call,
+    retry w/ backoff) into moto Kinesis, then drain all shards and hand
+    the payloads back as a DataFrame — the oracle compares against the
+    original events, so the full serialize→put→shard→get round-trip
+    must be lossless.
 
-    Writes run in ``foreachPartition`` on executors (each worker owns
-    its partition's batches — the production shape) through the
-    package's one put function, ``aws.put_records_with_retry``; the
-    read-back drain is driver-side by nature of the check."""
+    The events are collected and put from the driver with one client,
+    through the package's one put function,
+    ``aws.put_records_with_retry``, as the streaming sink puts each
+    micro-batch."""
     stream = f"kas-sink-{uuid.uuid4().hex[:10]}"
-    aws.create_stream(stream, shards=4)
+    kin = aws.create_stream(stream, shards=4)
     ephemeral_file(aws.moto_lock_path(stream))
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "event_type", (F.col("user_id") % 4).alias("pk")
     )
-    ev.foreachPartition(aws.partition_writer(stream, aws.endpoint_url(), aws.AWS_KW))
+    aws.put_records_with_retry(kin, stream, aws.row_records(ev.collect()))
 
     records = aws.read_all_records(stream)
     payloads = [json.loads(r["Data"]) for r in records]

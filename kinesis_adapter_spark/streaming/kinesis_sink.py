@@ -13,23 +13,15 @@ Contract implemented:
   checkpoint and re-delivery of the same batch is skipped, upgrading
   the sink to effectively-once for whole-batch replays.
 
-Where a micro-batch is put depends on Catalyst's size estimate of its
-plan (read without running a job):
-
-- at most ``DRIVER_PUT_MAX_BYTES`` (1 MiB): the batch is collected and
-  put from the driver through one client the sink keeps across
-  batches. 1 MiB is one shard-second of Kinesis write quota, so such a
-  batch gains nothing from parallel writers, while a
-  ``foreachPartition`` job would cost it a Python-worker round trip
-  per trigger — the dominant cost of a steady trickle;
-- larger, or of unknown size (Spark then reports its default maximum):
-  writes fan out via ``DataFrame.foreachPartition``, so each executor
-  ships its own partitions' chunks — the path that scales past what one
-  driver can hold. The closure (``aws.partition_writer``) is pickled by
-  value, so executors don't need this package importable.
-
-Both paths encode rows with ``aws.row_records``, so the bytes sent do
-not depend on the path.
+Every micro-batch is collected and put from the driver (SURVEY §3.4
+step 4), encoded by ``aws.row_records``, through one client the sink
+keeps across batches. The ``collect()`` is a JVM-only job. Fanning
+the puts out to executors cost a Python-worker job per batch plus a
+client per partition, and bought no parallelism against the local
+emulator, where puts to one stream serialize on ``aws.moto_put_lock``:
+on perfbench's ``kinesis_backfill`` it spent 14–21 s outside the JVM
+against under 1 s of task CPU. Concurrent puts against real Kinesis are
+left open (ROADMAP direction 2).
 """
 
 from __future__ import annotations
@@ -41,13 +33,6 @@ import boto3
 
 from kinesis_adapter_spark.sources import aws
 from kinesis_adapter_spark.staging import ephemeral_file
-
-DRIVER_PUT_MAX_BYTES = 1 << 20
-
-
-def plan_size_bytes(df) -> int:
-    """Catalyst's size estimate of ``df``'s optimized plan; runs no job."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 class KinesisForeachBatchSink:
@@ -67,24 +52,17 @@ class KinesisForeachBatchSink:
         self.ledger = Path(ledger_dir)
         self.ledger.mkdir(parents=True, exist_ok=True)
         self.pk_col = partition_key_col
-        self._kin = None  # the driver path's client, made on first use
-        # The put lock opens this file on driver and executors alike;
-        # register it here, on the driver, so a run leaves no /tmp residue.
+        self._kin = None  # made on first put, kept across batches
+        # The put lock opens this file; register it so a run leaves no
+        # /tmp residue.
         ephemeral_file(aws.moto_lock_path(stream))
 
     def __call__(self, batch_df, batch_id: int) -> None:
         mark = self.ledger / f"batch-{batch_id}.done"
         if mark.exists():  # replayed batch after restart → skip (idempotent)
             return
-        if plan_size_bytes(batch_df) <= DRIVER_PUT_MAX_BYTES:
-            if self._kin is None:
-                self._kin = boto3.client(
-                    "kinesis", endpoint_url=self.endpoint, **self.aws_kw
-                )
-            records = aws.row_records(batch_df.collect(), self.pk_col)
-            aws.put_records_with_retry(self._kin, self.stream, records)
-        else:
-            batch_df.foreachPartition(
-                aws.partition_writer(self.stream, self.endpoint, self.aws_kw, self.pk_col)
-            )
+        if self._kin is None:
+            self._kin = boto3.client("kinesis", endpoint_url=self.endpoint, **self.aws_kw)
+        records = aws.row_records(batch_df.collect(), self.pk_col)
+        aws.put_records_with_retry(self._kin, self.stream, records)
         mark.write_text(json.dumps({"batch_id": batch_id}))

@@ -118,22 +118,12 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert rows.get("10") == 1
 
 
-@pytest.mark.parametrize("put_path", ["driver", "executor"])
-def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path, monkeypatch, put_path):
+def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
     """Re-running the e2e pipeline with the SAME checkpoint+ledger and
-    stream delivers nothing new (batch-id ledger suppresses replay), on
-    both put paths; each path delivers the same bytes."""
+    stream delivers nothing new (batch-id ledger suppresses replay),
+    and the bytes delivered are ``row_records``' encoding."""
     from kinesis_adapter_spark.sources import aws
-    from kinesis_adapter_spark.streaming import kinesis_sink
-
-    monkeypatch.setattr(
-        kinesis_sink, "DRIVER_PUT_MAX_BYTES", 1 << 60 if put_path == "driver" else 0
-    )
-    writers = []
-    partition_writer = aws.partition_writer
-    monkeypatch.setattr(
-        aws, "partition_writer", lambda *a: writers.append(a) or partition_writer(*a)
-    )
+    from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
 
     names = ["plain", None, "café ✓ 日本", "naïve"]  # a null field, non-ASCII text
     src = tmp_path / "src"
@@ -151,7 +141,7 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path, monkeypatch, put_pat
     stream_name = f"kas-test-{tmp_path.name.lower()}"
     aws.create_stream(stream_name, shards=2)
     ckpt = str(tmp_path / "ckpt")
-    sink = kinesis_sink.KinesisForeachBatchSink(
+    sink = KinesisForeachBatchSink(
         stream=stream_name,
         endpoint=aws.endpoint_url(),
         aws_kw=aws.AWS_KW,
@@ -175,14 +165,65 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path, monkeypatch, put_pat
 
     run()
     assert drained() == sorted(expected)
-    if put_path == "driver":
-        assert sink._kin is not None and not writers
-    else:
-        assert sink._kin is None and writers
-    n_writers = len(writers)
     run()  # restart: checkpoint says done; even a replay would hit the ledger
     assert len(drained()) == 12, "restart must not redeliver"
-    assert len(writers) == n_writers
+
+
+def test_kinesis_sink_puts_large_batches_from_driver_with_one_client(spark, tmp_path, monkeypatch):
+    """Micro-batches of several partitions and over 1 MiB of estimated
+    plan size are delivered exactly, through one client for the whole
+    query."""
+    import boto3
+
+    from kinesis_adapter_spark.sources import aws
+    from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
+
+    src = tmp_path / "src"
+    expected = []
+    for i in range(6):
+        rows = [{"event_id": i * 1000 + j, "user_id": j, "name": f"{i}-{j}-" + "x" * 900} for j in range(300)]
+        _write_ndjson(src / f"f{i}.json", rows)
+        expected += [
+            (json.dumps({"event_id": r["event_id"], "name": r["name"]}).encode(), str(r["user_id"] % 3))
+            for r in rows
+        ]
+    stream_name = f"kas-test-{tmp_path.name.lower()}"
+    aws.create_stream(stream_name, shards=2)
+    sink = KinesisForeachBatchSink(
+        stream=stream_name,
+        endpoint=aws.endpoint_url(),
+        aws_kw=aws.AWS_KW,
+        ledger_dir=str(tmp_path / "ledger"),
+    )
+    batches = []
+
+    def observed_sink(batch_df, batch_id):
+        size = batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        batches.append((batch_df.rdd.getNumPartitions(), int(size)))
+        sink(batch_df, batch_id)
+
+    clients = []
+    make_client = boto3.client
+    monkeypatch.setattr(boto3, "client", lambda *a, **kw: clients.append(a) or make_client(*a, **kw))
+    q = (
+        spark.readStream.schema("event_id BIGINT, user_id BIGINT, name STRING")
+        .option("maxFilesPerTrigger", 3)
+        .json(str(src))
+        .select("event_id", "name", (F.col("user_id") % 3).cast("string").alias("pk"))
+        .writeStream.foreachBatch(observed_sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    monkeypatch.undo()
+
+    assert len(batches) == 2
+    for parts, size in batches:
+        assert parts >= 3 and size > 1 << 20, batches
+    assert clients == [("kinesis",)]
+    drained = sorted((r["Data"], r["PartitionKey"]) for r in aws.read_all_records(stream_name))
+    assert drained == sorted(expected)
 
 
 def test_sink_retry_on_partial_failure(monkeypatch):
@@ -209,7 +250,8 @@ def test_sink_retry_on_partial_failure(monkeypatch):
 
 def test_put_records_chunks_by_bytes_and_rejects_oversize():
     """Each PutRecords call carries at most 500 records and 5 MiB of
-    Data + PartitionKey; a record over 1 MiB fails before any put."""
+    Data + PartitionKey; a record over 1 MiB, or with an empty key or
+    one over 256 characters, fails before any put."""
     from kinesis_adapter_spark.sources.aws import put_records_with_retry
 
     calls = []
@@ -233,36 +275,11 @@ def test_put_records_chunks_by_bytes_and_rejects_oversize():
         put_records_with_retry(FakeKinesis(), "big-stream", [tiny] * 600 + [over])
     assert calls == []
 
-
-def test_partition_writer_ships_without_the_package(tmp_path):
-    """The executor closure and the put function unpickle and run in a
-    process that cannot import this package (they ship by value)."""
-    import os
-    import subprocess
-    import sys
-    import textwrap
-
-    from pyspark import cloudpickle
-
-    from kinesis_adapter_spark.sources import aws
-
-    blob = tmp_path / "fns.pkl"
-    blob.write_bytes(cloudpickle.dumps(
-        (aws.partition_writer("s", aws.endpoint_url(), aws.AWS_KW), aws.put_records_with_retry)
-    ))
-    code = textwrap.dedent("""
-        import pickle, sys
-        writer, put = pickle.loads(open(sys.argv[1], "rb").read())
-        class Kin:
-            def put_records(self, StreamName, Records):
-                return {"FailedRecordCount": 0, "Records": [{}] * len(Records)}
-        writer(iter([]))
-        assert put(Kin(), "s", [{"Data": b"x", "PartitionKey": "0"}] * 3) == 3
-        leaked = [m for m in sys.modules if m.startswith("kinesis_adapter_spark")]
-        assert not leaked, leaked
-    """)
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    subprocess.run([sys.executable, "-c", code, str(blob)], cwd=tmp_path, env=env, check=True)
+    for key in ("", "k" * 257):
+        with pytest.raises(ValueError, match=f"PartitionKey of {len(key)} characters for stream 'big-stream'"):
+            put_records_with_retry(FakeKinesis(), "big-stream", [tiny] * 600 + [{"Data": b"x", "PartitionKey": key}])
+        assert calls == []
+    assert put_records_with_retry(FakeKinesis(), "s", [{"Data": b"x", "PartitionKey": "k" * 256}]) == 1
 
 
 def test_windowed_state_survives_restart(spark, tmp_path):
