@@ -118,10 +118,15 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert rows.get("10") == 1
 
 
-def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
+# The ids name where a batch's rows sit before the sink collects them:
+# one partition ("driver") or spread over several ("executor"). Both
+# take the sink's one driver put.
+@pytest.mark.parametrize("batch_partitions", [1, 3], ids=["driver", "executor"])
+def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path, batch_partitions):
     """Re-running the e2e pipeline with the SAME checkpoint+ledger and
     stream delivers nothing new (batch-id ledger suppresses replay),
-    and the bytes delivered are ``row_records``' encoding."""
+    and the bytes delivered are ``row_records``' encoding, whether the
+    batch arrives in one partition or in several."""
     from kinesis_adapter_spark.sources import aws
     from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
 
@@ -148,12 +153,19 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
         ledger_dir=str(tmp_path / "ledger"),
     )
 
+    seen_partitions = []
+
+    def laid_out_sink(batch_df, batch_id):
+        batch_df = batch_df.repartition(batch_partitions)
+        seen_partitions.append(batch_df.rdd.getNumPartitions())
+        sink(batch_df, batch_id)
+
     def run():
         q = (
             spark.readStream.schema("event_id BIGINT, user_id BIGINT, name STRING")
             .json(str(src))
             .select("event_id", "name", (F.col("user_id") % 2).cast("string").alias("pk"))
-            .writeStream.foreachBatch(sink)
+            .writeStream.foreachBatch(laid_out_sink)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -164,7 +176,9 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
         return sorted((r["Data"], r["PartitionKey"]) for r in aws.read_all_records(stream_name))
 
     run()
+    assert seen_partitions and set(seen_partitions) == {batch_partitions}
     assert drained() == sorted(expected)
+    assert sink._kin is not None  # the one driver client
     run()  # restart: checkpoint says done; even a replay would hit the ledger
     assert len(drained()) == 12, "restart must not redeliver"
 
