@@ -384,15 +384,17 @@ def _probe_parallel() -> float:
     the single-threaded matmul probe read COOL — scalar probes cannot
     see stolen-core contamination. This probe can: under host-wide
     contention the slowest worker's wall inflates roughly with the
-    worst core's steal. Workers are forked once and reused; each
-    worker times its own burn, so the reading excludes fork/dispatch
-    overhead."""
+    worst core's steal. Workers are started once and reused; each
+    worker times its own burn, so the reading excludes start/dispatch
+    overhead. They are spawned, not forked: by the time the probe
+    first runs, the JVM's py4j threads may hold locks, and a worker
+    forked from under them can hang."""
     global _PAR_POOL
     n = _par_workers()
     if _PAR_POOL is None:
         import multiprocessing as mp
 
-        _PAR_POOL = mp.get_context("fork").Pool(n)
+        _PAR_POOL = mp.get_context("spawn").Pool(n)
         _PAR_POOL.map(_burn_once, range(n))  # warm-up (pool spin-up)
     return max(_PAR_POOL.map(_burn_once, range(n)))
 

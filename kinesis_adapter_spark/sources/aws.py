@@ -246,16 +246,19 @@ def put_records_with_retry(
             if not failed:
                 delivered += len(chunk)
                 break
-            retry = [
-                rec
-                for rec, st in zip(chunk, resp["Records"])
-                if "ErrorCode" in st
+            errs = [
+                (rec, st) for rec, st in zip(chunk, resp["Records"]) if "ErrorCode" in st
             ]
-            delivered += len(chunk) - len(retry)
-            chunk = retry
+            delivered += len(chunk) - len(errs)
+            chunk = [rec for rec, _ in errs]
             attempt += 1
             if attempt > max_retries:
-                raise RuntimeError(f"{len(chunk)} records failed after retries")
+                st = errs[0][1]
+                raise RuntimeError(
+                    f"{len(chunk)} records to stream {stream!r} still failed after "
+                    f"{attempt} PutRecords attempts; first error "
+                    f"{st['ErrorCode']}: {st.get('ErrorMessage', '')}"
+                )
             time.sleep(backoff_s * (2**attempt))
     return delivered
 

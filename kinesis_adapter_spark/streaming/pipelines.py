@@ -2172,96 +2172,86 @@ ORACLES["stream_bm25_maintain"] = ORACLES["text_bm25_topk"]
 
 @query("stream_kmv_maintain", "__SHARED_WITH_AGG_KMV_DISTINCT__")
 def stream_kmv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL KMV sketch maintenance — the merge law
-    (bottom-k of a union = bottom-k of the per-part bottom-ks,
-    pinned for the batch key in pytest) exercised as the ingest path
-    it exists for: events arrive in 3 micro-batches, each batch
-    appends only its LOCAL per-type bottom-k candidate rows
-    (k rows per (type, batch) — bounded, the sketch property; the
-    batch never ships its full distinct set), and the query merges
-    the stored candidates into the global k-min to produce the same
-    (exact, estimate) pair as the one-shot batch sketch. The oracle
-    IS agg_kmv_distinct's — convergence through the merge law is the
-    check. Exactness caveat handled the way real sketch stores do:
-    the EXACT count is maintained as its own append-only distinct
-    tier (type, user) — the thing the sketch replaces at 100 TB is
-    that tier, and the key keeps both precisely to show they agree
-    below k and diverge within the error band above it."""
-    from kinesis_adapter_spark.operators.aggregates import (
-        KMV_K,
-        kmv_u_expr,
-    )
+    """INCREMENTAL KMV sketch maintenance — the merge law (bottom-k of
+    a union = bottom-k of the per-part bottom-ks, pinned for the batch
+    key in pytest) exercised as the ingest path it exists for. Events
+    arrive in 3 micro-batches; each runs one exchange (by event_type,
+    serving its distinct and its bottom-k window) and one write that
+    appends two tiers of one directory: ``tier=k``, the batch's LOCAL
+    per-type bottom-k candidates (at most k rows per (type, batch) —
+    bounded, the sketch property), and ``tier=d``, the exact distinct
+    (type, user) rows — the thing the sketch replaces at 100 TB, kept
+    to show the two agree below k and diverge within the error band
+    above it. No emptiness job and no persist: an availableNow
+    foreachBatch gets no empty batches. The merge is aggregates only
+    and yields the same (exact, estimate) pair as the one-shot batch
+    sketch; the oracle IS agg_kmv_distinct's."""
+    from pyspark.sql import Window
+
+    from kinesis_adapter_spark.operators.aggregates import KMV_K, kmv_u_expr
 
     work = Path(ephemeral_dir("kas_kmvstream_"))
-    src = _ensure_event_arrivals(sf_dir)
-    sk_path = str(work / "sketch")
-    d_path = str(work / "distinct")
+    tiers = str(work / "tiers")
+    w = Window.partitionBy("event_type").orderBy("u", "user_id")
+    # every distinct row goes to tier=d, the batch's bottom-k also to tier=k
+    tiers_of_row = F.when(
+        F.col("rn") <= KMV_K, F.array(F.lit("d"), F.lit("k"))
+    ).otherwise(F.array(F.lit("d")))
 
-    def sketch_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        if not batch_df.take(1):
-            return
-        # r16: the per-batch distinct feeds BOTH tier writes —
-        # persist so the batch JSON is parsed and deduped once
-        d = batch_df.select("event_type", "user_id").distinct().persist()
-        try:
-            d.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(d_path)
-            w = Window.partitionBy("event_type").orderBy("u", "user_id")
-            (
-                d.select("event_type", "user_id", kmv_u_expr().alias("u"))
-                .withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") <= KMV_K)  # LOCAL bottom-k: bounded append
-                .select("event_type", "user_id", "u")
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(sk_path)
+    def write_tiers(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            batch_df.repartition("event_type")
+            .select("event_type", "user_id")
+            .distinct()
+            .withColumn("u", kmv_u_expr())
+            .withColumn("rn", F.row_number().over(w))
+            .select(
+                "event_type",
+                "user_id",
+                "u",
+                F.lit(batch_id).alias("batch_id"),
+                F.explode(tiers_of_row).alias("tier"),
             )
-        finally:
-            d.unpersist()
+            .write.mode("append")
+            .partitionBy("tier")
+            .parquet(tiers)
+        )
 
     q = (
         spark.readStream.schema("event_id bigint, event_type string, user_id bigint")
         .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(sketch_batch)
+        .json(str(_ensure_event_arrivals(sf_dir)))
+        .writeStream.foreachBatch(write_tiers)
         .option("checkpointLocation", str(work / "ckpt"))
         .trigger(availableNow=True)
         .start()
     )
     _await_done(q, 180)
 
-    from pyspark.sql import Window
-
-    # merge: global bottom-k of the stored per-batch bottom-ks.
-    # Replay collapse (r16 round-close, guide §2.4): a replayed batch
-    # re-appends IDENTICAL candidate rows (u is a deterministic
-    # function of user_id), so the trailing distinct over the projected
-    # columns SUBSUMES the per-(key, batch_id) window collapse — the
-    # same set survives with a hash aggregate instead of an exchange +
-    # full sort + row_number per tier.
-    cand = (
-        spark.read.parquet(sk_path)
-        .select("event_type", "user_id", "u")
-        .distinct()  # collapses replays AND users sketched in several batches
+    # merge: one read (schema given, so no job infers it), one exchange.
+    # The first aggregate collapses replays — a replayed batch
+    # re-appends identical rows, u being a function of user_id — and
+    # users seen in several batches; the second counts the exact tier
+    # and takes the k-th smallest (u, user_id) of the sketch candidates.
+    users = (
+        spark.read.schema(
+            "event_type string, user_id bigint, u double, batch_id int, tier string"
+        )
+        .parquet(tiers)
+        .repartition("event_type")
+        .groupBy("event_type", "user_id", "u")
+        .agg(
+            F.bool_or(F.col("tier") == "d").alias("in_d"),
+            F.bool_or(F.col("tier") == "k").alias("in_k"),
+        )
     )
-    w = Window.partitionBy("event_type").orderBy("u", "user_id")
-    r = cand.withColumn("rn", F.row_number().over(w))
-    ex = (
-        spark.read.parquet(d_path)
-        .select("event_type", "user_id")
-        .distinct()  # collapses replays and cross-batch repeats alike
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("exact"))
-    )
-    s = r.groupBy("event_type").agg(
-        F.max(F.when(F.col("rn") == KMV_K, F.col("u"))).alias("u_k")
+    cand = F.when(F.col("in_k"), F.struct("u", "user_id"))
+    s = users.groupBy("event_type").agg(
+        F.count_if("in_d").alias("exact"),
+        F.get(F.sort_array(F.collect_list(cand)), KMV_K - 1)["u"].alias("u_k"),
     )
     return (
-        ex.join(s, "event_type")
-        .select(
+        s.select(
             "event_type",
             "exact",
             F.coalesce(
@@ -2269,6 +2259,7 @@ def stream_kmv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("exact").cast("double"),
             ).alias("kmv_estimate"),
         )
+        .coalesce(1)  # a row per type: sort in place, no range exchange
         .orderBy("event_type")
     )
 

@@ -3654,9 +3654,11 @@ def test_bench_parallel_probe_gates_when_scalar_reads_cool(monkeypatch):
         bench._HOT_PAR_SEC, bench._WAIT_BUDGET[0] = old
 
 
-def test_bench_parallel_probe_reads_sane():
+def test_bench_parallel_probe_reads_sane(spark):
     """_probe_parallel returns a positive sub-second max-over-workers
-    reading and is reusable (pooled workers)."""
+    reading and is reusable (pooled workers). Run with the session's
+    JVM and py4j threads alive, as in bench.py: the pool's workers are
+    spawned, so none inherits a lock one of those threads held."""
     import bench
 
     p1 = bench._probe_parallel()

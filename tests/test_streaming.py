@@ -262,6 +262,39 @@ def test_sink_retry_on_partial_failure(monkeypatch):
     assert calls[0] == 500 and calls[1] == 250 and calls[2] == 100  # chunking + retry
 
 
+def test_put_retry_exhaustion_names_stream_and_error(monkeypatch):
+    """A record throttled on every attempt exhausts the retries: the
+    raise names the stream, the first ErrorCode/ErrorMessage and the
+    attempt count, after backing off 0.1, 0.2, 0.4, 0.8 and 1.6 s."""
+    from kinesis_adapter_spark.sources import aws
+
+    sleeps, calls = [], []
+    monkeypatch.setattr(aws.time, "sleep", sleeps.append)
+    code = "ProvisionedThroughputExceededException"
+    msg = "Rate exceeded for shard shardId-000000000000"
+
+    class FakeKinesis:
+        def put_records(self, StreamName, Records):
+            calls.append(len(Records))
+            st = [
+                {"ErrorCode": code, "ErrorMessage": msg}
+                if r["PartitionKey"] == "hot"
+                else {"SequenceNumber": "1"}
+                for r in Records
+            ]
+            return {"FailedRecordCount": sum("ErrorCode" in s for s in st), "Records": st}
+
+    recs = [{"Data": b"x", "PartitionKey": "0"}] * 9 + [{"Data": b"x", "PartitionKey": "hot"}]
+    with pytest.raises(RuntimeError) as exc:
+        aws.put_records_with_retry(FakeKinesis(), "storm-stream", recs)
+    assert str(exc.value) == (
+        f"1 records to stream 'storm-stream' still failed after 6 PutRecords "
+        f"attempts; first error {code}: {msg}"
+    )
+    assert sleeps == pytest.approx([0.1, 0.2, 0.4, 0.8, 1.6])
+    assert calls == [10, 1, 1, 1, 1, 1]
+
+
 def test_put_records_chunks_by_bytes_and_rejects_oversize():
     """Each PutRecords call carries at most 500 records and 5 MiB of
     Data + PartitionKey; a record over 1 MiB, or with an empty key or
@@ -833,6 +866,59 @@ def test_kmv_maintain_converges_via_merge_law(spark):
     ]
     assert got == ref
     assert len(got) > 0
+
+
+def test_kmv_maintain_replayed_batch_and_bounded_sketch(spark, tmp_path, monkeypatch):
+    """stream_kmv_maintain's tiers after a replay: one committed batch's
+    tier rows re-appended verbatim (a kill between the tier write and
+    the checkpoint commit), then the key rerun over the same work
+    directory, must merge to the one-shot batch sketch's
+    (exact, kmv_estimate) exactly, and the sketch tier holds at most
+    KMV_K rows per (event_type, batch_id). sf0.01, not sf0.001: at
+    sf0.001 every type has 15 users, fewer than KMV_K, so the bound
+    never binds and the estimate is the exact fallback."""
+    from kinesis_adapter_spark.operators.aggregates import KMV_K
+    from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
+    from kinesis_adapter_spark.streaming import pipelines
+
+    load_all_modules()
+    sf = "/root/testdata/sf0.01"
+    monkeypatch.setattr(pipelines, "ephemeral_dir", lambda prefix: str(tmp_path))
+    ref = [tuple(r) for r in QUERIES["agg_kmv_distinct"](spark, sf).collect()]
+    assert [tuple(r) for r in QUERIES["stream_kmv_maintain"](spark, sf).collect()] == ref
+    assert any(exact > KMV_K for _, exact, _ in ref), "vacuous: no type above k"
+
+    tiers = str(tmp_path / "tiers")
+    tier = spark.read.parquet(tiers)
+    per_batch = tier.groupBy("tier", "event_type", "batch_id").count()
+    assert per_batch.filter("tier = 'k'").agg(F.max("count")).first()[0] == KMV_K
+    assert per_batch.filter("tier = 'd'").agg(F.max("count")).first()[0] > KMV_K
+    assert sorted(r.batch_id for r in tier.select("batch_id").distinct().collect()) == [0, 1, 2]
+
+    # simulate the replayed write of an already-committed batch, then
+    # rerun the key: the checkpoint says every batch is done, so only
+    # the merge runs, over the replayed rows
+    tier.filter(F.col("batch_id") == 1).write.mode("append").partitionBy("tier").parquet(tiers)
+    assert spark.read.parquet(tiers).count() > tier.count()
+    assert [tuple(r) for r in QUERIES["stream_kmv_maintain"](spark, sf).collect()] == ref
+
+
+def test_kmv_maintain_job_count(spark):
+    """One stream_kmv_maintain call at sf0.001 submits at most 8 Spark
+    jobs: 2 per micro-batch (the exchange, then the one tier write) and
+    2 for the merge (the exchange, then the aggregate). A re-added
+    emptiness check, second tier write or schema-inference read adds
+    jobs and fails here. Counted with the DAG scheduler's next job id,
+    which works with the UI off."""
+    from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
+
+    load_all_modules()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = int(dag.nextJobId())
+    rows = QUERIES["stream_kmv_maintain"](spark, "/root/testdata/sf0.001").collect()
+    jobs = int(dag.nextJobId()) - first
+    assert len(rows) > 0
+    assert jobs <= 8, jobs
 
 
 def test_cdc_apply_stream_converges_out_of_order(spark):
