@@ -1732,7 +1732,7 @@ def _materialize_iterative(
     # RETURNS is a read of the staged result, so a plan dump of the
     # declared key shows only Sort+Scan — the actual iterative loop
     # plan was never committed as evidence. With KAS_ITER_PLAN_DUMP
-    # set (tools/dump_plan_r17.py), dump the PRE-materialization plan
+    # set (tools/profile_keys.py --plan), dump the PRE-materialization plan
     # of the exact `out` about to execute, one file per call (ADVICE
     # r17 #3: a multi-stage loop calls this more than once per key).
     dump_dir = os.environ.get("KAS_ITER_PLAN_DUMP")

@@ -54,73 +54,33 @@ from kinesis_adapter_spark.sources.scans import (
 from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
 
 
-def _ensure_doc_arrivals(sf_dir: str) -> Path:
-    """documents → 3 NDJSON arrival files split by ``doc_id % 3`` —
-    the ingest fixture stream_bm25_maintain consumes. Staged ONCE per
-    source fingerprint under the derived dir (r16, guide §1.2): the
-    r15 shape re-rendered the whole corpus to JSON on the DRIVER on
-    every call, so each bench iteration timed a fixture export instead
-    of the maintenance under measurement. Same input-format-staging
+def _split_arrivals(sf_dir: str, name: str, table: str, columns: list[str]) -> Path:
+    """``table``'s ``columns`` → 3 NDJSON arrival files split by
+    ``columns[0] % 3``, one ``json.dumps`` object per row — the ingest
+    fixture of the bm25, kmv and pq maintain twins. Staged ONCE per
+    source fingerprint as ``derived_dir/<name>`` (r16, guide §1.2): the
+    r15 shape re-rendered the table to JSON on the DRIVER on every
+    call, so each bench iteration timed a fixture export instead of
+    the maintenance under measurement. Same input-format-staging
     contract as ensure_events_ndjson (the arrival files are the
     operator's INPUT; the maintained tiers are still rebuilt from them
     on every invocation)."""
     import pyarrow.parquet as pq
 
-    def build(out: Path) -> None:
-        out.mkdir()
-        tbl = pq.read_table(
-            f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
-        )
-        rows = list(
-            zip(tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist())
-        )
-        for b in range(3):
-            (out / f"arrivals_{b}.json").write_text(
-                "\n".join(
-                    json.dumps({"doc_id": d, "text": t})
-                    for d, t in rows
-                    if d % 3 == b
-                )
-            )
-
-    return staged(
-        derived_dir(sf_dir) / "bm25_arrivals",
-        [Path(sf_dir) / "documents.parquet"],
-        build,
-    )
-
-
-def _ensure_event_arrivals(sf_dir: str) -> Path:
-    """events (event_id, event_type, user_id) → 3 NDJSON arrival files
-    split by ``event_id % 3`` — stream_kmv_maintain's ingest fixture.
-    Same once-per-fingerprint contract as _ensure_doc_arrivals."""
-    import pyarrow.parquet as pq
+    src = Path(sf_dir) / f"{table}.parquet"
 
     def build(out: Path) -> None:
         out.mkdir()
-        tbl = pq.read_table(
-            f"{sf_dir}/events.parquet",
-            columns=["event_id", "event_type", "user_id"],
-        )
-        rows = list(
-            zip(
-                tbl.column("event_id").to_pylist(),
-                tbl.column("event_type").to_pylist(),
-                tbl.column("user_id").to_pylist(),
-            )
-        )
+        cols = pq.read_table(src, columns=columns).to_pydict()
+        rows = list(zip(*(cols[c] for c in columns)))
         for b in range(3):
             (out / f"arrivals_{b}.json").write_text(
                 "\n".join(
-                    json.dumps({"event_id": e, "event_type": t, "user_id": u})
-                    for e, t, u in rows
-                    if e % 3 == b
+                    json.dumps(dict(zip(columns, r))) for r in rows if r[0] % 3 == b
                 )
             )
 
-    return staged(
-        derived_dir(sf_dir) / "kmv_arrivals", [Path(sf_dir) / "events.parquet"], build
-    )
+    return staged(derived_dir(sf_dir) / name, [src], build)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str, max_files: int | None = None):
@@ -131,12 +91,17 @@ def _events_stream(spark: SparkSession, sf_dir: str, max_files: int | None = Non
     return reader.json(str(src_dir))
 
 
+#: how long any availableNow query here may run before it counts as wedged
+_AWAIT_S = 180
+
+
 def _await_done(q, timeout_s: int) -> None:
     """awaitTermination with a timeout returns FALSE on expiry instead
-    of raising; every maintenance pipeline here reads its sink right
-    after, so a silent timeout would mean computing results from a
-    half-written artifact tier. Convert the False into a loud error
-    (r5 review finding)."""
+    of raising; every pipeline here reads its sink right after, so a
+    silent timeout would mean computing results from a half-written
+    artifact tier, and an unbounded wait would hang on a wedged query.
+    Stop the query and convert the False into a loud error (r5 review
+    finding)."""
     if not q.awaitTermination(timeout_s):
         q.stop()
         raise TimeoutError(
@@ -144,6 +109,22 @@ def _await_done(q, timeout_s: int) -> None:
             f"{timeout_s}s — artifact tier is incomplete; raise the "
             "timeout or reduce the staged batch count"
         )
+
+
+def _drain(stream: DataFrame, body, ckpt: str) -> None:
+    """Run ``body(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` (availableNow, checkpointed at ``ckpt``) and wait for
+    the last one — the one replayable-source → foreachBatch loop every
+    maintain twin and sink key here shares. ``body`` needs no emptiness
+    check: a stateless availableNow query runs no batch without new
+    input."""
+    q = (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    _await_done(q, _AWAIT_S)
 
 
 def _dedup_replays(tier: DataFrame, *keys: str) -> DataFrame:
@@ -190,7 +171,7 @@ def _run_to_memory(df, mode: str = "complete", max_files: int | None = None):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    _await_done(q, _AWAIT_S)
     return name, q.recentProgress
 
 
@@ -687,7 +668,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        _await_done(q, _AWAIT_S)
 
     staged = [
         ("a.json", {"event_id": 1, "ts_iso": "2024-01-01T00:00:01"}),
@@ -728,7 +709,7 @@ def stream_throughput_file(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    _await_done(q, _AWAIT_S)
     return spark.read.parquet(out).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("user_id").alias("n_users"),
@@ -811,13 +792,7 @@ def stream_to_kinesis_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         (F.col("user_id") % 4).cast("string").alias("pk"),
     )
-    q = (
-        out.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(out, sink, ckpt)
     payloads = [json.loads(r["Data"]) for r in aws.read_all_records(stream)]
     # No distinct() here (ADVICE r01): the stream is fresh per run, so a
     # duplicate delivery is a REAL exactly-once violation and must fail
@@ -894,13 +869,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, 120)
+    _drain(stream, merge, str(work / "ckpt"))
     return spark.read.parquet(versions[-1]).orderBy("k")
 
 
@@ -953,8 +922,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         b = batch_df.select(
             "o_orderkey", "seq", "op", "o_orderstatus", "o_totalprice"
         ).withColumn("w", F.lit(1).cast("bigint"))
-        if not b.take(1):
-            return
         if versions:
             prev = sess.read.parquet(versions[-1]).select(
                 "o_orderkey",
@@ -984,13 +951,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, 180)
+    _drain(stream, fold, str(work / "ckpt"))
     return (
         spark.read.parquet(versions[-1])
         .filter(F.col("last_op") != "D")
@@ -1148,13 +1109,7 @@ def stream_minhash_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, 180)
+    _drain(stream, index_batch, str(work / "ckpt"))
 
     # ---- dedup query over the maintained artifact only ----
     sig = spark.read.parquet(sig_path)
@@ -1225,14 +1180,11 @@ def _stream_hll_rollup_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sink)
         )
 
-    q = (
-        _events_stream(spark, sf_dir, max_files=4)
-        .writeStream.foreachBatch(sketch_batch)
-        .option("checkpointLocation", ephemeral_dir("kas_hllroll_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _events_stream(spark, sf_dir, max_files=4),
+        sketch_batch,
+        ephemeral_dir("kas_hllroll_ckpt_"),
     )
-    _await_done(q, 180)
 
     # Replay collapse BY KEY, not by row identity (ADVICE r16 medium):
     # the other tiers' rows are deterministic integers, so byte-equal
@@ -1574,14 +1526,11 @@ def stream_histogram_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def hist_batch(batch_df: DataFrame, batch_id: int) -> None:
         _hist_partials(batch_df, batch_id).write.mode("append").parquet(sink)
 
-    q = (
-        _events_stream(spark, sf_dir, max_files=4)
-        .writeStream.foreachBatch(hist_batch)
-        .option("checkpointLocation", ephemeral_dir("kas_histroll_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        _events_stream(spark, sf_dir, max_files=4),
+        hist_batch,
+        ephemeral_dir("kas_histroll_ckpt_"),
     )
-    _await_done(q, 180)
 
     tier = _dedup_replays(spark.read.parquet(sink), "event_type", "bin")
     hist = tier.groupBy("event_type", "bin").agg(F.sum("n").alias("n"))
@@ -1687,13 +1636,7 @@ def stream_phash_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    q = (
-        stream.writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, 180)
+    _drain(stream, index_batch, str(work / "ckpt"))
 
     from kinesis_adapter_spark.operators.multimodal import phash_pairs
 
@@ -1895,8 +1838,8 @@ def _scd2_maintain_run(
         try:
             # r16 round-close (guide §6 pushdown / §2.4 fewer jobs):
             # the affected-user set is BOUNDED (user_id < 50 ⇒ ≤50
-            # values), so collect it once — one job that doubles as
-            # the empty-batch guard (was a separate take(1)) — and
+            # values), so collect it once — one job that also skips a
+            # batch with no affected user — and
             # filter both tier reads with a literal IN list instead of
             # two broadcast joins: the In predicate pushes into the
             # parquet scans (row-group pruning on the user-bucketed
@@ -1974,13 +1917,7 @@ def _scd2_maintain_run(
         .json(src_dir)
         .select("user_id", "event_type", "ts_ns", "event_id")
     )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await_done(q, 180)
+    _drain(stream, merge, str(work / "ckpt"))
     return spark.read.parquet(versions[-1]).orderBy("user_id", "valid_from")
 
 
@@ -1989,14 +1926,15 @@ def stream_pq_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL PQ index maintenance — the ingest half of the
     vector-index story (pq_codebooks_table trains the quantizer
     offline; this key shows vectors ARRIVING and the code table
-    growing): the corpus lands in 3 NDJSON micro-batches, and
-    foreachBatch PQ-encodes ONLY its own batch's vectors against the
-    FROZEN published codebooks (the shared _pq_encode_frame — a pure
-    per-vector function, so maintenance never re-reads indexed
-    vectors) and appends (vec_id, codes, batch_id) to the code
-    parquet. That frozen-codebook append is exactly how FAISS/vector
-    DBs ingest: retraining the quantizer is an offline rebuild, never
-    part of the write path.
+    growing): the corpus lands in 3 NDJSON micro-batches (staged
+    once per embeddings fingerprint), and foreachBatch PQ-encodes
+    ONLY its own batch's vectors against the FROZEN published
+    codebooks (the shared _pq_encode_frame — a pure per-vector
+    function, so maintenance never re-reads indexed vectors) and
+    appends (vec_id, codes, batch_id) to the code parquet. That
+    frozen-codebook append is exactly how FAISS/vector DBs ingest:
+    retraining the quantizer is an offline rebuild, never part of the
+    write path.
 
     The query then reads the maintained artifact alone (replays
     collapsed by the shared _dedup_replays rule) and must hash-equal
@@ -2010,44 +1948,23 @@ def stream_pq_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         _pq_encode_frame,
     )
 
-    import pyarrow.parquet as pq
-
     books = _pq_books(spark, sf_dir)  # frozen quantizer (trains offline once)
     work = Path(ephemeral_dir("kas_pqstream_"))
-    src = work / "src"
-    src.mkdir()
     codes_path = str(work / "codes")
-
-    tbl = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
-    rows = list(
-        zip(tbl.column("vec_id").to_pylist(), tbl.column("embedding").to_pylist())
-    )
-    for b in range(3):
-        (src / f"arrivals_{b}.json").write_text(
-            "\n".join(
-                json.dumps({"vec_id": v, "embedding": [float(x) for x in emb]})
-                for v, emb in rows
-                if v % 3 == b
-            )
-        )
+    src = _split_arrivals(sf_dir, "pq_arrivals", "embeddings", ["vec_id", "embedding"])
 
     def encode_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         _pq_encode_frame(batch_df, books).withColumn(
             "batch_id", F.lit(batch_id)
         ).write.mode("append").parquet(codes_path)
 
-    q = (
+    _drain(
         spark.readStream.schema("vec_id bigint, embedding array<float>")
         .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(encode_batch)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .json(str(src)),
+        encode_batch,
+        str(work / "ckpt"),
     )
-    _await_done(q, 180)
 
     return (
         _dedup_replays(spark.read.parquet(codes_path), "vec_id")
@@ -2062,20 +1979,22 @@ def stream_bm25_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     BM25 search story (text_bm25_topk scores in one batch pass; this
     key shows documents ARRIVING and the index growing): the corpus
     lands in 3 NDJSON micro-batches, and foreachBatch tokenizes ONLY
-    its own batch's documents, appending two tiers — per-doc length
-    rows ``(doc_id, dl)`` and full postings ``(doc_id, w, tf)`` (the
-    inverted index itself; per-doc-distinct-word sized, what Lucene
-    segments are). Indexed documents are never re-read.
+    its own batch's documents and appends one tier, the full postings
+    ``(doc_id, w, tf, batch_id)`` (the inverted index itself;
+    per-doc-distinct-word sized, what Lucene segments are). Indexed
+    documents are never re-read.
 
-    The query then scores ENTIRELY from the maintained tiers: N and
-    avgdl from the dl tier (exact integer token sums, the batch
-    contract), df/tf for the query terms from the postings, the
-    partial-score expression shared verbatim with the batch scorer
+    The query then scores ENTIRELY from the maintained tier: each
+    doc's length ``dl`` is SUM(tf) over its postings (every token is
+    counted by exactly one (doc, w) tf — the exact integer token sum
+    of the batch contract), N and avgdl roll up those lengths, df/tf
+    for the query terms come from the postings, the partial-score
+    expression is shared verbatim with the batch scorer
     (bm25_part_expr — never-fork), top-20 TakeOrderedAndProject. It
     must hash-equal the one-shot batch ranking, so the oracle IS
     text_bm25_topk's. At 100 TB the per-batch cost is |batch|
-    tokenization + two appends; corpus stats are rollups over the
-    doc-sized dl tier, never a text re-scan — the same
+    tokenization + one append; corpus stats are rollups over the
+    maintained tier, never a text re-scan — the same
     artifact-maintenance discipline as stream_minhash_maintain."""
     from kinesis_adapter_spark.operators.llmops import (
         BM25_TERMS,
@@ -2083,22 +2002,11 @@ def stream_bm25_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     work = Path(ephemeral_dir("kas_bm25stream_"))
-    src = _ensure_doc_arrivals(sf_dir)
-    dl_path = str(work / "dl")
     post_path = str(work / "postings")
+    src = _split_arrivals(sf_dir, "bm25_arrivals", "documents", ["doc_id", "text"])
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        # r16 (guide §1.2/§2.3): the r15 shape tokenized the batch
-        # TWICE (once per tier write — the exploded token relation fed
-        # both unpersisted). Now the batch is tokenized once into the
-        # per-(doc, word) postings aggregate — the SMALL frame (per-doc
-        # distinct words, not per-token rows) — which is persisted for
-        # its two consumers: the postings append, and the dl tier
-        # derived as SUM(tf) per doc (≡ the old per-token COUNT(*):
-        # every token is counted by exactly one (doc, w) tf).
-        post = (
+        (
             batch_df.select(
                 "doc_id",
                 F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("w"),
@@ -2106,41 +2014,31 @@ def stream_bm25_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("w").rlike("^[a-z]+$"))
             .groupBy("doc_id", "w")
             .agg(F.count(F.lit(1)).alias("tf"))
-            .persist()
+            .withColumn("batch_id", F.lit(batch_id))
+            .write.mode("append")
+            .parquet(post_path)
         )
-        try:
-            post.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(post_path)
-            post.groupBy("doc_id").agg(F.sum("tf").alias("dl")).withColumn(
-                "batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(dl_path)
-        finally:
-            post.unpersist()
 
-    q = (
+    _drain(
         spark.readStream.schema("doc_id bigint, text string")
         .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .json(str(src)),
+        index_batch,
+        str(work / "ckpt"),
     )
-    _await_done(q, 180)
 
-    dl = _dedup_replays(spark.read.parquet(dl_path), "doc_id").select(
-        "doc_id", "dl"
+    post = _dedup_replays(spark.read.parquet(post_path), "doc_id", "w")
+    dl = (
+        post.groupBy("doc_id", "batch_id")
+        .agg(F.sum("tf").alias("dl"))
+        .drop("batch_id")
     )
-    postings = _dedup_replays(
-        spark.read.parquet(post_path), "doc_id", "w"
-    ).select("doc_id", "w", "tf")
     st = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
     )
     terms = list(BM25_TERMS)
-    tf = postings.filter(F.col("w").isin(terms)).select(
+    tf = post.filter(F.col("w").isin(terms)).select(
         "doc_id", "w", F.col("tf").cast("double").alias("tf")
     )
     idf = (
@@ -2157,7 +2055,6 @@ def stream_bm25_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .select("doc_id", "score")
     )
-
 
 
 # stream_pq_maintain converges to the batch encoding, so its oracle IS
@@ -2182,8 +2079,7 @@ def stream_kmv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded, the sketch property), and ``tier=d``, the exact distinct
     (type, user) rows — the thing the sketch replaces at 100 TB, kept
     to show the two agree below k and diverge within the error band
-    above it. No emptiness job and no persist: an availableNow
-    foreachBatch gets no empty batches. The merge is aggregates only
+    above it, with no persist. The merge is aggregates only
     and yields the same (exact, estimate) pair as the one-shot batch
     sketch; the oracle IS agg_kmv_distinct's."""
     from pyspark.sql import Window
@@ -2217,16 +2113,16 @@ def stream_kmv_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(tiers)
         )
 
-    q = (
+    src = _split_arrivals(
+        sf_dir, "kmv_arrivals", "events", ["event_id", "event_type", "user_id"]
+    )
+    _drain(
         spark.readStream.schema("event_id bigint, event_type string, user_id bigint")
         .option("maxFilesPerTrigger", 1)
-        .json(str(_ensure_event_arrivals(sf_dir)))
-        .writeStream.foreachBatch(write_tiers)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .json(str(src)),
+        write_tiers,
+        str(work / "ckpt"),
     )
-    _await_done(q, 180)
 
     # merge: one read (schema given, so no job infers it), one exchange.
     # The first aggregate collapses replays — a replayed batch
@@ -2284,8 +2180,6 @@ def _semdedup_indexer(docs, k, kc, seed_table, meta_path):
     )
 
     def index_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
         assigned = _ivf_two_level_assign(
             batch_df.select("vec_id", F.col("emb").alias("x")),
             k=k,
@@ -2372,7 +2266,7 @@ def stream_semdedup_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = Path(ephemeral_dir("kas_semdedup_stream_"))
     meta_path = str(work / "meta")
     # Staged ONCE per embeddings fingerprint (r16, the
-    # _ensure_doc_arrivals contract): the r15 shape re-exported the
+    # _split_arrivals contract): the r15 shape re-exported the
     # corpus per CALL — three filtered coalesce(1) JSON jobs every
     # bench iteration timing a fixture export, not the maintenance.
     # Export stays row-for-row WITHOUT a driver collect of the corpus:
@@ -2401,16 +2295,13 @@ def stream_semdedup_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _semdedup_quality_docs(spark, sf_dir)
     index_batch = _semdedup_indexer(docs, k, kc, seed_table, meta_path)
 
-    q = (
+    _drain(
         spark.readStream.schema("vec_id bigint, emb array<double>")
         .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-        .writeStream.foreachBatch(index_batch)
-        .option("checkpointLocation", str(work / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        .json(str(src)),
+        index_batch,
+        str(work / "ckpt"),
     )
-    _await_done(q, 180)
 
     # ---- audit over the maintained tier alone (shared tail) ----
     meta = _dedup_replays(spark.read.parquet(meta_path), "vec_id").select(

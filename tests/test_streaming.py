@@ -830,8 +830,8 @@ def test_pq_maintain_converges_to_batch_encoding(spark):
 
 
 def test_bm25_maintain_converges_to_batch_ranking(spark):
-    """stream_bm25_maintain (3 arrival batches, append-only dl +
-    postings tiers) must end hash-equal to the one-shot batch top-20 —
+    """stream_bm25_maintain (3 arrival batches, one append-only
+    postings tier) must end hash-equal to the one-shot batch top-20 —
     only possible if the maintained corpus stats (N, avgdl, df) and
     term frequencies exactly reconstruct the batch scorer's inputs."""
     from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
@@ -903,22 +903,84 @@ def test_kmv_maintain_replayed_batch_and_bounded_sketch(spark, tmp_path, monkeyp
     assert [tuple(r) for r in QUERIES["stream_kmv_maintain"](spark, sf).collect()] == ref
 
 
-def test_kmv_maintain_job_count(spark):
-    """One stream_kmv_maintain call at sf0.001 submits at most 8 Spark
-    jobs: 2 per micro-batch (the exchange, then the one tier write) and
-    2 for the merge (the exchange, then the aggregate). A re-added
-    emptiness check, second tier write or schema-inference read adds
-    jobs and fails here. Counted with the DAG scheduler's next job id,
-    which works with the UI off."""
+TWIN_MAX_JOBS = {
+    "stream_kmv_maintain": 8,
+    "stream_bm25_maintain": 20,
+    "stream_pq_maintain": 8,
+    "stream_semdedup_maintain": 20,
+    "stream_cdc_apply": 19,
+}
+
+
+@pytest.mark.parametrize("key", TWIN_MAX_JOBS)
+def test_maintain_twin_job_count(spark, key):
+    """One call of a maintain twin at sf0.001, after a warm-up call
+    (pq and semdedup stage their frozen models on the first one),
+    submits at most ``TWIN_MAX_JOBS[key]`` Spark jobs. kmv: 2 per
+    micro-batch (the exchange, then the one tier write) and 2 for the
+    merge. A re-added emptiness check (``take(1)``), second tier write
+    or schema-inference read adds jobs and fails here. Counted with
+    the DAG scheduler's next job id, which works with the UI off."""
     from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
 
     load_all_modules()
+    QUERIES[key](spark, SF).collect()
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     first = int(dag.nextJobId())
-    rows = QUERIES["stream_kmv_maintain"](spark, "/root/testdata/sf0.001").collect()
+    rows = QUERIES[key](spark, SF).collect()
     jobs = int(dag.nextJobId()) - first
     assert len(rows) > 0
-    assert jobs <= 8, jobs
+    assert jobs <= TWIN_MAX_JOBS[key], jobs
+
+
+def test_bm25_maintain_replayed_batch(spark, tmp_path, monkeypatch):
+    """stream_bm25_maintain keeps one postings tier and derives each
+    doc's length from it. One committed batch's postings re-appended
+    verbatim (a kill between the tier write and the checkpoint commit),
+    then the key rerun over the same work directory, must still rank
+    exactly like text_bm25_topk: the merge collapses the replayed rows
+    before it sums tf into dl, N and avgdl."""
+    from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
+    from kinesis_adapter_spark.streaming import pipelines
+
+    load_all_modules()
+    sf = "/root/testdata/sf0.01"
+    monkeypatch.setattr(pipelines, "ephemeral_dir", lambda prefix: str(tmp_path))
+    ref = [tuple(r) for r in QUERIES["text_bm25_topk"](spark, sf).collect()]
+    assert [tuple(r) for r in QUERIES["stream_bm25_maintain"](spark, sf).collect()] == ref
+    assert len(ref) > 0
+
+    postings = str(tmp_path / "postings")
+    tier = spark.read.parquet(postings)
+    assert sorted(r.batch_id for r in tier.select("batch_id").distinct().collect()) == [0, 1, 2]
+    # simulate the replayed write of an already-committed batch, then
+    # rerun the key: the checkpoint says every batch is done, so only
+    # the merge runs, over the replayed rows
+    tier.filter(F.col("batch_id") == 1).write.mode("append").parquet(postings)
+    assert spark.read.parquet(postings).count() > tier.count()
+    assert [tuple(r) for r in QUERIES["stream_bm25_maintain"](spark, sf).collect()] == ref
+
+
+def test_await_done_stops_and_names_a_wedged_query(spark, tmp_path):
+    """A query that cannot finish (a rate source under the default
+    trigger never runs out of input) makes _await_done stop it and
+    raise a TimeoutError naming it, instead of waiting forever."""
+    from kinesis_adapter_spark.streaming.pipelines import _await_done
+
+    q = (
+        spark.readStream.format("rate")
+        .load()
+        .writeStream.format("noop")
+        .queryName("wedged_rate")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="wedged_rate"):
+            _await_done(q, 1)
+        assert not q.isActive
+    finally:
+        q.stop()
 
 
 def test_cdc_apply_stream_converges_out_of_order(spark):
